@@ -287,11 +287,11 @@ local[32] (spans/s: {r2['spans_per_sec']:.0f} / {r8['spans_per_sec']:.0f}
   NO Python-object materialization, the parsed schema is narrow (one
   string set per span + scan_only flag, not fast/full pairs), and the
   stage uses cores x 2 partitions (each mapInArrow task pays a ~11 ms
-  Python-worker round trip — measured by the interleaved A/B in
-  BENCH/diag_arrow_interleaved.py).  The r2 pandas-object kernel moved
+  Python-worker round trip — measured by an interleaved A/B script
+  since deleted; see git history).  The r2 pandas-object kernel moved
   ~5x more bytes per row and pinned the stage at the bus ceiling (flat
-  multi-JVM scaling); the bare-kernel probe
-  (BENCH/diag_kernel_scaling.py) now shows 2.6x single-proc speedup and
+  multi-JVM scaling); the bare-kernel probe (since deleted; see git
+  history) showed 2.6x single-proc speedup and
   1.00 efficiency at 1 -> 8 procs for the pyarrow kernel.
 
 Per-level run series (catalyst, steady-state convergence visible):

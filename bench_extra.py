@@ -121,7 +121,8 @@ def main():
 
     elif which == "cosine":
         from document_processor_spark.operators import dedup
-        e_raw = dedup._emb(spark, sf_dir)
+        from document_processor_spark.operators._scan import read_table
+        e_raw = read_table(spark, sf_dir, "embeddings")
 
         def sig_only():
             e = (e_raw.select("vec_id", dedup._dbl("embedding").alias("v"))

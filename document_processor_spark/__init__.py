@@ -14,7 +14,7 @@ contract.py    the canonical extraction semantics (T1-T7 of SURVEY.md §2.3)
 fixtures.py    deterministic synthetic corpus generator (seed=42, FIXTURES.md)
 oracle.py      pure-Python reference implementation (the correctness anchor)
 pipeline.py    the end-to-end Spark extraction pipeline (2 engines: native
-               Catalyst expressions, and Arrow/pandas mapInArrow)
+               Catalyst expressions, and pyarrow mapInArrow)
 functions/     column-level building blocks (cleaning, classify, html, ...)
 operators/     dataflow + training-data operators (dedup, ann, text analysis)
 io/            Iceberg-semantics table layer (snapshots, lineage, resume)

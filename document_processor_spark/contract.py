@@ -1,8 +1,8 @@
 """The canonical extraction contract (SURVEY.md §2.3, T1-T7).
 
 Single source of truth for the semantics that the pure-Python oracle
-(`oracle.py`), the native-Catalyst Spark engine and the Arrow/pandas Spark
-engine (`pipeline.py`) must all implement identically.  Every rule cites the
+(`oracle.py`), the native-Catalyst Spark engine and the Arrow Spark engine
+(`pipeline.py`) must all implement identically.  Every rule cites the
 reference implementation at /root/reference.
 
 Input span raw kinds (FIXTURES.md §1.1)::

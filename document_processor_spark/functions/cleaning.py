@@ -38,30 +38,11 @@ def strip_tags_col(raw: Column) -> Column:
     return F.regexp_replace(raw, C.HTML_TAG_PATTERN, " ")
 
 
-def html_is_heading_col(raw: Column) -> Column:
-    return raw.rlike(C.HTML_HEADING_PATTERN)
-
-
 def html_density_col(raw: Column, cleaned: Column) -> Column:
     """text-density score; guarded division (no ANSI surprises)."""
     return F.when(F.length(raw) > 0,
                   F.length(cleaned).cast("double") / F.length(raw).cast("double")
                   ).otherwise(F.lit(0.0))
-
-
-def decode_scan_col(text: Column) -> Column:
-    """Deterministic synthetic OCR decode of 'scan:'+base64 payloads (T4).
-    Malformed payloads -> null, never an exception (reference skips
-    unparseable regions, content_extractor.py:87-99).  Two safety layers,
-    matching `contract.decode_scan` exactly: the strict full-base64 grammar
-    guard makes unbase64 total (charset alone is not — unbase64('A') throws
-    on invalid length), and try_validate_utf8 nulls byte sequences that are
-    not valid UTF-8 (decode(bin,'UTF-8') raises MALFORMED_CHARACTER_CODING
-    even with ANSI off)."""
-    body = text.substr(F.lit(len(C.SCAN_PREFIX) + 1), F.length(text))
-    return F.when(text.rlike(C.SCAN_PAYLOAD_PATTERN),
-                  F.try_validate_utf8(F.unbase64(body).cast("string"))
-                  ).otherwise(F.lit(None))
 
 
 def flatten_table_col(raw: Column) -> Column:

@@ -72,6 +72,19 @@ def _partition_metrics(input_batch: DataFrame, written: DataFrame) -> dict[int, 
     return m
 
 
+def snapshot_rows(detailed: DataFrame, n_parts: int) -> DataFrame:
+    """The spans-table row for each extracted doc (pipeline.extract_detailed
+    output).  Docs whose extraction yields zero spans stay as quarantine
+    rows (empty spans array — the reference's counted-and-skipped
+    semantics, app/api.py:86-98) with a skip_reason; read_spans filters
+    them out."""
+    skip_reason = (F.when(F.size("spans") > 0, F.lit(None).cast("string"))
+                    .otherwise(F.lit("no_extractable_content")))
+    return with_part(detailed, n_parts).select(
+        "doc_id", "spans", "fallback_pages", "pages_in",
+        skip_reason.alias("skip_reason"), PART_COL)
+
+
 def run_extraction_job(spark: SparkSession, docs: DataFrame, warehouse: str,
                        run_id: str, n_parts: int = 32, engine: str = "sql",
                        partitions_per_commit: int | None = None,
@@ -94,6 +107,7 @@ def run_extraction_job(spark: SparkSession, docs: DataFrame, warehouse: str,
     request parameters, app/api.py:69-70) applied before the span explode.
     ocr_pipeline: converter-chain choice fast/full/hybrid (the reference's
     OcrPipeline request param, api.py:69 — see pipeline.assemble)."""
+    pipeline.check_engine(engine)
     table = IceLite(warehouse, SPANS_TABLE)
     # resume safety: committed partition ids are only meaningful under the
     # SAME bucketing — resuming with a different n_parts would skip wrong
@@ -118,21 +132,13 @@ def run_extraction_job(spark: SparkSession, docs: DataFrame, warehouse: str,
 
     for batch in batches:
         input_batch = docs.filter(F.col(PART_COL).isin(batch))
-        parsed = pipeline.ENGINES[engine](
-            pipeline.explode_spans(input_batch, first_page, last_page))
-        detailed = with_part(
-            pipeline.assemble(parsed, ocr_pipeline=ocr_pipeline), n_parts)
-        # doc-level lineage (fallback_pages, pages_in) is stored in the table;
-        # docs whose extraction yields zero spans stay as quarantine rows
-        # (empty spans array — the reference's counted-and-skipped semantics,
-        # app/api.py:86-98) and are filtered out by read_spans.  Per-partition
-        # metrics then come from the written snapshot, so the extraction runs
-        # exactly once per batch.
-        skip_reason = (F.when(F.size("spans") > 0, F.lit(None).cast("string"))
-                        .otherwise(F.lit("no_extractable_content")))
-        result = detailed.select("doc_id", "spans", "fallback_pages",
-                                 "pages_in", skip_reason.alias("skip_reason"),
-                                 PART_COL)
+        # doc-level lineage (fallback_pages, pages_in) is stored in the
+        # table, quarantine rows included; per-partition metrics then come
+        # from the written snapshot, so the extraction runs exactly once
+        # per batch
+        result = snapshot_rows(pipeline.extract_detailed(
+            input_batch, engine, first_page=first_page, last_page=last_page,
+            ocr_pipeline=ocr_pipeline), n_parts)
         manifest = table.append(result, run_id, partitions=batch,
                                 extra={"engine": engine, "n_parts": n_parts},
                                 cluster_by=list(cluster_by or ()))

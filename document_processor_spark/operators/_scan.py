@@ -1,26 +1,20 @@
-"""Scale-adaptive post-scan fan-out (optimization round 6).
+"""Table reads for the operator queries, plus per-run scratch space.
 
-Every operator's table helper used to append an unconditional
-``.repartition(defaultParallelism)`` after the parquet scan.  That is the
-right move for the sandbox fixtures — each table is ONE single-row-group
-file, so the scan is one task and the round-robin repartition is the only
-way the downstream CPU work parallelizes — but at production scale it is
-exactly the anti-pattern the optimization guide warns about (§2.4, §6): a
-table that already scans as hundreds of splits would pay a full shuffle of
-every byte for nothing.
+``read_table`` scans one fixture table and fans the rows out round-robin
+over every core when the scan alone would not.  The sandbox fixtures are
+single-file tables, so the scan is one task and the repartition is the only
+way the downstream CPU work parallelizes.  At production scale a table
+already scans as hundreds of splits, and a repartition there would shuffle
+every byte for nothing, so it is skipped.
 
-``fan_out`` keeps the local behaviour and removes the scale hazard by
-deciding from input size: the scan's own task count is estimated as
-``file_bytes / spark.sql.files.maxPartitionBytes`` (the same arithmetic
-FilePartition uses, minus the 4 MB open-cost packing term — an
-underestimate only for many-small-file layouts, which err on the safe
-side here: an underestimate can only keep the repartition).  When the
-scan already yields at least one task per core, the data is parallel
-enough and no shuffle is added.
-
-File sizes and the parsed maxPartitionBytes are cached per path/session —
-the decision costs microseconds of driver time, not a py4j round trip per
-query build.
+The scan's task count is estimated as ``sizeInBytes /
+spark.sql.files.maxPartitionBytes`` — the arithmetic FilePartition uses,
+minus the 4 MB open-cost packing term.  ``sizeInBytes`` is Spark's own
+file-index statistic for the scan (``pipeline._plan_size_bytes``): it
+counts every file of a partitioned directory and works on any filesystem
+Spark can list, object storage included.  The estimate errs low only for
+many-small-file layouts, and an underestimate can only keep the
+repartition.
 """
 
 from __future__ import annotations
@@ -29,55 +23,19 @@ import os
 import tempfile
 from pathlib import Path
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-_SIZE_CACHE: dict[str, int] = {}
-_MPB_CACHE: dict[int, int] = {}
-
-_UNITS = {"b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20, "mb": 1 << 20,
-          "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40, "tb": 1 << 40}
+from ..pipeline import _plan_size_bytes
 
 
-def _parse_bytes(v: str) -> int:
-    s = str(v).strip().lower()
-    for suffix in sorted(_UNITS, key=len, reverse=True):
-        if s.endswith(suffix):
-            return int(float(s[: -len(suffix)]) * _UNITS[suffix])
-    return int(float(s))
-
-
-def _path_bytes(path: str) -> int:
-    got = _SIZE_CACHE.get(path)
-    if got is None:
-        try:
-            if os.path.isdir(path):
-                got = sum(e.stat().st_size for e in os.scandir(path)
-                          if e.is_file())
-            else:
-                got = os.path.getsize(path)
-        except OSError:
-            got = 0
-        _SIZE_CACHE[path] = got
-    return got
-
-
-def _max_partition_bytes(spark) -> int:
-    key = id(spark)
-    got = _MPB_CACHE.get(key)
-    if got is None:
-        got = _parse_bytes(spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", str(128 << 20)))
-        _MPB_CACHE[key] = got
-    return got
-
-
-def fan_out(df: DataFrame, path: str) -> DataFrame:
-    """Round-robin fan-out after a parquet scan of `path`, skipped when the
-    scan itself already produces >= one split per core."""
-    spark = df.sparkSession
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan `{sf_dir}/{name}.parquet`, repartitioned round-robin to one
+    partition per core unless the scan already yields >= one split per
+    core.  An unknown size keeps the repartition."""
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     cores = spark.sparkContext.defaultParallelism
-    est_tasks = -(-_path_bytes(path) // _max_partition_bytes(spark))
-    if est_tasks >= cores:
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    if -(-(_plan_size_bytes(df) or 0) // split) >= cores:
         return df
     return df.repartition(cores)
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ._scan import fan_out
+from ._scan import read_table
 from .dedup import (_CAT_NORM, _CAT_V, _SQL_DOT, _SQL_NORM, _bucket_expr,
                     _cat_cos, _dbl, _desc_then_id, _dot, _norm, _sql_bucket)
 
@@ -28,8 +28,7 @@ QUERY_MOD = 50          # vec_id % 50 == 0 → query set
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # norm materialized once per vector (never recomputed per candidate
     # pair); single-parse SQL strings per the r6 build-cost note in dedup
-    return (fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-                    f"{sf_dir}/embeddings.parquet")
+    return (read_table(spark, sf_dir, "embeddings")
             .selectExpr("vec_id", _CAT_V)
             .selectExpr("vec_id", "v", _CAT_NORM.format(a="v") + " AS nrm"))
 
@@ -91,8 +90,7 @@ def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partition pruning on the join key); the bounded query side
     broadcasts; the rank window is per-query bounded.  cosine ships
     floor-quantized to 1e-6 integer units."""
-    raw = (fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-                   f"{sf_dir}/embeddings.parquet")
+    raw = (read_table(spark, sf_dir, "embeddings")
            .selectExpr("vec_id", "label", _CAT_V)
            .selectExpr("vec_id", "label", "v",
                        _CAT_NORM.format(a="v") + " AS nrm"))
@@ -345,8 +343,7 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, xs, xq): embeddings scaled by _QUANT to exact integers
     (associative bigint sums — reproducible across partitionings), plus
     the double view the distance folds consume."""
-    e = (fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-                 f"{sf_dir}/embeddings.parquet")
+    e = (read_table(spark, sf_dir, "embeddings")
          .select("vec_id",
                  F.transform(
                      "embedding",

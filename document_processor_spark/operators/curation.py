@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ._scan import read_table
 from .dedup import (
     MINHASH_P,
     N_BANDS,
@@ -1325,10 +1326,9 @@ def q_cur_universe_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the key.  The rollup after the (now tiny) inner join is one
     mergeable groupBy.  countDistinct here is exact and bounded by the
     sampled-user count.  Output is pure integers."""
-    from .relational import _t
-    ev = (_t(spark, sf_dir, "events")
+    ev = (read_table(spark, sf_dir, "events")
           .filter(_hash_u(F.col("user_id")) < UNIVERSE_T))
-    cust = (_t(spark, sf_dir, "customer")
+    cust = (read_table(spark, sf_dir, "customer")
             .filter(_hash_u(F.col("c_custkey")) < UNIVERSE_T)
             .select("c_custkey", "c_mktsegment"))
     return (ev.join(cust, ev.user_id == cust.c_custkey)

@@ -23,7 +23,7 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from ._scan import fan_out
+from ._scan import read_table
 
 N_BANDS = 8
 MINHASH_ROWS_PER_BAND = 2   # r>=2: band collision needs r hash agreements,
@@ -38,10 +38,7 @@ COSINE_T = 0.4
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-file fixture scan -> fan out for the shingle/hash stages
-    # (skipped adaptively when the scan already parallelizes — see _scan)
-    return fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"),
-                   f"{sf_dir}/documents.parquet")
+    return read_table(spark, sf_dir, "documents")
 
 
 def _pin(df: DataFrame) -> DataFrame:
@@ -62,11 +59,6 @@ def _pin(df: DataFrame) -> DataFrame:
     if sess.conf.get("spark.document_processor.pin", "local") == "checkpoint":
         return df.checkpoint(eager=False)
     return df.localCheckpoint(eager=False)
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-                   f"{sf_dir}/embeddings.parquet")
 
 
 # -- exact dedup ---------------------------------------------------------------
@@ -628,7 +620,7 @@ def _emb_vn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings scan → (vec_id, v: array<double>, nrm) in two parsed
     selects (the optimizer collapses them; nrm folds over the same `v`
     subtree as before)."""
-    return (_emb(spark, sf_dir)
+    return (read_table(spark, sf_dir, "embeddings")
             .selectExpr("vec_id", _CAT_V)
             .selectExpr("vec_id", "v", _CAT_NORM.format(a="v") + " AS nrm"))
 

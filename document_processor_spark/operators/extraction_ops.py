@@ -18,18 +18,7 @@ from pyspark.sql import functions as F
 
 from .. import contract as C
 from ..functions import cleaning as X
-from ._scan import fan_out
-
-DOCS = "documents.parquet"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the fixture table is one parquet file = one scan split; fan out so the
-    # regex-heavy derivations use every core (at 100 TB the scan has
-    # thousands of splits and fan_out skips the shuffle entirely)
-    path = f"{sf_dir}/{DOCS}"
-    return fan_out(spark.read.parquet(path), path)
-
+from ._scan import read_table
 
 # -- S18/T3: glyph cleaning --------------------------------------------------
 
@@ -38,7 +27,7 @@ _GLYPH_INJECT_SUFFIX = " \tglyph<c=3,font=/AB1+Foo-Bar>x"
 
 
 def q_glyph_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     dirty = F.concat(F.lit(_GLYPH_INJECT_PREFIX), F.col("text"),
                      F.lit(_GLYPH_INJECT_SUFFIX))
     return d.select("doc_id", X.clean_text_col(dirty).alias("cleaned_text"))
@@ -59,7 +48,7 @@ FROM documents
 # -- S14/T1: reading-order reconstruction (posexplode + ordinal) -------------
 
 def q_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     return (d.select("doc_id", F.posexplode(F.split("text", " ", -1))
                      .alias("pos0", "word"))
             .select("doc_id", (F.col("pos0") + 1).cast("bigint").alias("pos"),
@@ -78,7 +67,7 @@ FROM documents
 
 def q_slice_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     words = d.select("doc_id", F.posexplode(F.split("text", " ", -1))
                      .alias("pos0", "word"))
     w = W.partitionBy("doc_id").orderBy("pos0")
@@ -105,7 +94,7 @@ FROM words
 def q_kind_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classify derived blocks: first 4 words as a planted heading, the rest
     as body; heading iff marker present (the fixture rule)."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     head = F.concat(F.lit("H1: "),
                     F.array_join(F.slice(F.split("text", " ", -1), 1, 4), " "))
     body = F.col("text")
@@ -135,7 +124,7 @@ FROM blocks
 def q_table_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Construct a 2-row cell grid from each doc's text, then apply the
     canonical flattening (split rows/cells, glyph-clean each cell, re-join)."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     grid = F.concat(
         F.lit("colA\tcolB\n"),
         F.regexp_replace(F.array_join(F.slice(F.split("text", " ", -1), 1, 4), " "),
@@ -173,7 +162,7 @@ FROM grids
 def q_fallback_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic scan-page proxy (n_chars % 7 = 0) aggregated per source:
     the ocr_fallback_rate ops metric (BASELINE.json:6)."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     scan = F.when(F.col("n_chars") % 7 == 0, 1).otherwise(0)
     # rate derived from the two integer aggregates (one division per group):
     # order-independent, bit-identical across engines — never avg() over
@@ -201,7 +190,7 @@ GROUP BY source
 # -- S5: page-count scan + S21 round + S26 base64 -------------------------------
 
 def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         (F.lit(1) + F.expr("n_chars div 500")).alias("pages"),
@@ -227,7 +216,7 @@ def q_caption_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
     lead() window over reading order — the Spark analog of docling's
     caption_text linkage (slice_extractor.py:131-145)."""
     from pyspark.sql import Window as W
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     blocks = d.select(
         "doc_id",
         F.posexplode(F.array(
@@ -264,7 +253,7 @@ FROM seq WHERE ord = 0
 def q_skip_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Empty/undersized-payload gate (app/api.py:86-98) as a counted filter
     per source — quarantine accounting, not errors."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     ok = (F.length(F.trim(F.col("text"))) > 0) & (F.col("n_chars") >= 50)
     return (d.groupBy("source")
             .agg(F.sum(F.when(ok, 1).otherwise(0)).alias("accepted"),
@@ -285,7 +274,7 @@ GROUP BY source
 def q_html_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wrap each doc's head in synthetic markup, then strip + density-score:
     the DOM-heuristic boilerplate filter on a checkable derivation."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     markup = F.concat(F.lit('<div class="c"><p>'),
                       F.substring("text", 1, 80),
                       F.lit('</p><a href="/x">m</a></div>'))
@@ -333,7 +322,7 @@ def q_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     heading-level stack of SURVEY.md §1.1), headings parent to the doc root.
     `level` mirrors docling's traversal depth (page_extractor.py:87-95)."""
     from pyspark.sql import Window as W
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     words = F.split("text", " ", -1)
     # six word-chunks per doc; every 3rd chunk is a planted heading
     chunk = F.transform(
@@ -397,7 +386,7 @@ def q_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimals + per-page width/height — the lineage-metadata projection the
     reference emits per slice (slice_extractor.py:18-54,
     page_extractor.py:39-49)."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     words = F.split("text", " ", -1)
     chunk = F.transform(
         F.sequence(F.lit(0), F.lit(5)),

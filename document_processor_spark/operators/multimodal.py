@@ -17,7 +17,7 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ._scan import fan_out
+from ._scan import read_table
 
 MEDIA_SCHEMA = ("doc_id bigint, media_ref string, media_type string, "
                 "n_bytes bigint, width bigint, height bigint, "
@@ -28,8 +28,7 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derive an opaque-binary media table from the documents corpus:
     (doc_id, payload:binary, media_type, hint) — the input shape of a real
     multimodal pipeline."""
-    d = fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"),
-                f"{sf_dir}/documents.parquet")
+    d = read_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.encode(F.substring("text", 1, 64), "UTF-8").alias("payload"),
@@ -122,8 +121,7 @@ DECODE_SCHEMA = ("doc_id bigint, media_type string, width bigint, "
 def fake_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Media table whose payloads are real fake-codec containers (binary
     column built JVM-side with concat over encoded parts)."""
-    d = fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"),
-                f"{sf_dir}/documents.parquet")
+    d = read_table(spark, sf_dir, "documents")
     mt = (F.when(F.col("n_chars") % 3 == 0, "image/png")
            .when(F.col("n_chars") % 3 == 1, "audio/wav")
            .otherwise("video/mp4"))
@@ -297,8 +295,7 @@ FRAME_SCHEMA = ("doc_id bigint, frame_idx bigint, ts_ms bigint, "
 def video_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fake-codec table with a document-dependent pixel-run length
     (16 + n_chars % 24 bytes → 4..9 frames) so frame counts vary."""
-    d = fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"),
-                f"{sf_dir}/documents.parquet")
+    d = read_table(spark, sf_dir, "documents")
     mt = (F.when(F.col("n_chars") % 3 == 0, "image/png")
            .when(F.col("n_chars") % 3 == 1, "audio/wav")
            .otherwise("video/mp4"))

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from .. import contract as C
 from .. import pipeline
-from ._scan import fan_out
+from ._scan import read_table
 from ._scan import scratch_dir as _scratch_dir
 
 _BOILER = '<nav class="m"><a href="/a">a</a><a href="/b">b</a></nav>'
@@ -36,8 +36,7 @@ _BOILER = '<nav class="m"><a href="/a">a</a><a href="/b">b</a></nav>'
 def derived_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interleaved input derived from the documents table: 7-8 spans per
     doc across 2 pages, every raw kind, unique (page, block) slots."""
-    d = fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"),
-                f"{sf_dir}/documents.parquet")
+    d = read_table(spark, sf_dir, "documents")
     w = F.split("text", " ", -1)
     w4 = F.array_join(F.slice(w, 1, 4), " ")
     h60 = F.substring("text", 1, 60)
@@ -242,8 +241,7 @@ def skew_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc collect+sort aggregation under one giant group: reading order
     is a per-doc total order, so the group is irreducible at any scale —
     the engine must survive the straggler, not re-shard it."""
-    d = fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"),
-                f"{sf_dir}/documents.parquet")
+    d = read_table(spark, sf_dir, "documents")
     n = F.when(F.col("doc_id") % SKEW_MOD == 0,
                F.lit(SKEW_N)).otherwise(F.lit(2))
     head = F.substring("text", 1, 20)

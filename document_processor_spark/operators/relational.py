@@ -16,22 +16,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
-from ._scan import fan_out
+from ._scan import read_table
 
 SESSION_GAP_S = 1800
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # fixture tables are single parquet files (one scan split each); fan out
-    # (skipped adaptively when the scan already parallelizes — see _scan)
-    return fan_out(spark.read.parquet(f"{sf_dir}/{name}.parquet"),
-                   f"{sf_dir}/{name}.parquet")
 
 
 # -- TPC-H Q1-style aggregation -----------------------------------------------
 
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     dq = F.col("l_quantity").cast("decimal(18,2)")
     dp = F.col("l_extendedprice").cast("decimal(18,2)")
     dd = F.col("l_discount").cast("decimal(18,2)")
@@ -63,9 +56,9 @@ GROUP BY l_returnflag, l_linestatus
 def q_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue per market segment: lineitem ⋈ orders ⋈ broadcast(customer).
     The dims broadcast (no shuffle of the fact table for the join)."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    li = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     rev = (F.col("l_extendedprice").cast("decimal(18,2)")
            * (F.lit(1).cast("decimal(18,2)")
               - F.col("l_discount").cast("decimal(18,2)")))
@@ -96,7 +89,7 @@ def q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition top-k + tiny driver merge) — never
     a global single-task row_number window, which would shuffle every row
     to one reducer.  The rank window afterwards runs on k rows only."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     order_cols = [F.col("o_totalprice").desc(), F.col("o_orderkey")]
     top = (o.select("o_orderkey", "o_totalprice", "o_orderpriority")
            .orderBy(*order_cols).limit(10))
@@ -117,7 +110,7 @@ SELECT rank, o_orderkey, o_totalprice, o_orderpriority FROM (
 # -- gap-based sessionization (batch analog of session windows) ---------------------
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
     # microsecond precision: second-level diffs truncate differently across
@@ -165,7 +158,7 @@ FROM sess GROUP BY user_id
 def q_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly tumbling counts per event_type, bucketed by seconds since the
     corpus min(ts) — timezone-free, identical in any engine."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     m = ev.agg(F.min("ts").alias("t0"))
     bucket = F.floor(F.expr("timestampdiff(MICROSECOND, t0, ts)")
                      / 3_600_000_000.0)
@@ -207,7 +200,7 @@ def q_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     its predecessor's last click — same operator, one extra boundary
     pass.  Output carries the attribution lag in microseconds rather
     than raw timestamps (timezone-free, module discipline)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     sides = (ev.filter(F.col("event_type").isin("click", "purchase"))
              .select("user_id", "ts", "event_id",
                      (F.col("event_type") == "purchase").alias("is_left")))
@@ -256,7 +249,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     since the corpus min(ts) (timezone-free, module discipline); the
     window table is generated, deterministic, and at real scale would be
     the scan of an interval dimension table instead."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     m = ev.agg(F.min("ts").alias("t0"))
     e = (ev.crossJoin(F.broadcast(m))
          .select("event_id", "value",
@@ -311,14 +304,14 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⋈supplier on suppkey) stay shuffle equi-joins keyed on uniform
     surrogate keys; the date filter pushes into the orders scan
     (PushedFilters).  Decimal discipline on the revenue sum."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(
+    li = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1997-01-01")))
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
-    r = F.broadcast(_t(spark, sf_dir, "region")
+    c = read_table(spark, sf_dir, "customer")
+    s = read_table(spark, sf_dir, "supplier")
+    n = F.broadcast(read_table(spark, sf_dir, "nation"))
+    r = F.broadcast(read_table(spark, sf_dir, "region")
                     .filter(F.col("r_name") == "ASIA"))
     rev = (F.col("l_extendedprice").cast("decimal(18,2)")
            * (F.lit(1).cast("decimal(18,2)")
@@ -375,15 +368,15 @@ def q_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast at runtime when it proves tiny.  The detail re-aggregation
     reuses the same orderkey partitioning.  Output keeps the raw
     o_totalprice double untouched (pass-through, no float arithmetic)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     dq = F.col("l_quantity").cast("decimal(18,2)")
     big = (li.groupBy("l_orderkey")
            .agg(F.sum(dq).alias("sum_qty"))
            .filter(F.col("sum_qty") > LARGE_ORDER_QTY)
            .select("l_orderkey", F.col("sum_qty").cast("double")
                    .alias("sum_qty")))
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer")
     return (big.join(o, big["l_orderkey"] == o["o_orderkey"])
             .join(c, F.col("o_custkey") == F.col("c_custkey"))
             .select("c_name", F.col("o_custkey").alias("c_custkey"),
@@ -432,11 +425,11 @@ def q_priority_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     the conditional counts are sums of 0/1 integers, fully mergeable
     (map-side partial agg), with no float op anywhere so both engines
     agree bit-for-bit."""
-    li = (_t(spark, sf_dir, "lineitem")
+    li = (read_table(spark, sf_dir, "lineitem")
           .filter((F.col("l_shipdate") >= F.lit("1995-01-01"))
                   & (F.col("l_shipdate") < F.lit("1997-01-01")))
           .select("l_orderkey", "l_returnflag"))
-    o = (_t(spark, sf_dir, "orders")
+    o = (read_table(spark, sf_dir, "orders")
          .select("o_orderkey", "o_orderpriority"))
     is_high = F.col("o_orderpriority").isin(*HIGH_PRIORITIES)
     return (li.join(o, li.l_orderkey == o.o_orderkey)
@@ -477,8 +470,8 @@ def q_order_count_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeable.  Two shuffles total on uniform keys; at 10^12 orders the
     pre-aggregation is what keeps the join input bounded by |customer|.
     Pure integer output — bit-exact across engines."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    per_cust = (_t(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer").select("c_custkey")
+    per_cust = (read_table(spark, sf_dir, "orders")
                 .groupBy("o_custkey")
                 .agg(F.count(F.lit(1)).alias("n_orders")))
     counts = (c.join(per_cust, c.c_custkey == per_cust.o_custkey, "left")
@@ -524,7 +517,7 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     right after (which re-aggregates across salts by construction).
     The weighted revenue stays exact: DECIMAL × BIGINT, ×100 on the
     decimal, floor to BIGINT — no IEEE op before quantization."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     dim = (ev.select("event_type").distinct()
            .withColumn("tier", F.length("event_type").cast("bigint")))
     sdim = dim.withColumn(
@@ -570,7 +563,7 @@ def q_moments_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges reorder additions.  corr ships integer-quantized (floor 1e6)
     per the repo's cross-engine float discipline; IEEE sqrt/divide are
     correctly rounded so identical expression trees agree bitwise."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("decimal(18,2)")
     y = F.col("l_extendedprice").cast("decimal(18,2)")
     g = (li.groupBy("l_returnflag")
@@ -638,7 +631,7 @@ def q_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines emit bit-identical doubles."""
     from .dedup import _pin
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     m = ev.agg(F.min("ts").alias("t0"))
     hb = F.floor(F.expr("timestampdiff(MICROSECOND, t0, ts)")
                  / 3_600_000_000.0).cast("bigint")
@@ -704,7 +697,7 @@ def q_salted_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is what the DuckDB oracle states."""
     from .skew import salted_agg
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return salted_agg(
         docs, "source", SALT_N, ["doc_id"],
         F.count(F.lit(1)).alias("n_docs"),
@@ -735,7 +728,7 @@ def q_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     build wants (never union-of-3-scans).  grouping_id() disambiguates
     subtotal NULLs from data NULLs; decimal sums keep the result
     partial-order-independent."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     rev = (F.col("l_extendedprice").cast("decimal(18,2)")
            * (F.lit(1).cast("decimal(18,2)")
               - F.col("l_discount").cast("decimal(18,2)")))
@@ -758,7 +751,7 @@ def q_skyline_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     over that POST-AGGREGATION table (dimension-sized — #suppliers, not
     corpus rows), left-anti so only undominated rows survive.  Exact
     integer cents/units — no float threshold."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     rev = (F.col("l_extendedprice").cast("decimal(18,2)")
            * (F.lit(1).cast("decimal(18,2)")
               - F.col("l_discount").cast("decimal(18,2)")))
@@ -802,7 +795,7 @@ def q_cube_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     set; CUBE is what a BI layer asks for when both dimensions filter
     independently).  Same scale shape: map-side replicate + partial agg,
     one hash shuffle, grouping_id() disambiguates subtotal NULLs."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     return (o.cube("o_orderpriority", "o_orderstatus")
             .agg(F.grouping_id().cast("bigint").alias("gid"),
                  F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
@@ -847,7 +840,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     event (timestamp differences only — timezone-free, both engines
     identical).  NULL ordering does the gating: `us >= tv` is NULL until
     the previous stage fired, so the conditional min skips it."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     t0 = F.min("ts").over(W.partitionBy("user_id"))
     b = (ev.withColumn("t0", t0)
          .select("user_id", "event_type",
@@ -929,7 +922,7 @@ def q_rolling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized state.  Time discipline: the order key is microseconds
     since the corpus min(ts) (broadcast 1-row), so no epoch/timezone
     call ever runs."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     m = ev.agg(F.min("ts").alias("t0"))
     e = (ev.crossJoin(F.broadcast(m))
          .select("event_id", "user_id",
@@ -971,7 +964,7 @@ def q_rel_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale; an implicit pivot triggers a distinct-values collect on the
     driver) and plans as ONE partial+final aggregation, exactly like the
     conditional-sum form the oracle states."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     wide = (d.groupBy("lang").pivot("source", list(PIVOT_SRCS))
             .agg(F.count(F.lit(1))))
     return wide.select(
@@ -991,7 +984,7 @@ def q_rel_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark plans these as hash aggregations over a single shuffle each —
     both inputs partition on the full row — with no join in sight; the
     oracle uses the identical ANSI set operators."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select("user_id")
     buys = ev.filter(F.col("event_type") == "purchase").select("user_id")
     both = clicks.intersect(buys).select(
@@ -1033,7 +1026,7 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id is the unique sequence.  last_value is quantized through
     integer math only after the single surviving row is chosen, so the
     oracle is exact."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     last = ev.groupBy("user_id").agg(
         F.max("event_id").alias("last_event_id"),
         F.expr("max_by(event_type, event_id)").alias("last_type"),
@@ -1085,7 +1078,7 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     Time discipline: intervals are integer microseconds since the corpus
     min(ts) (broadcast 1-row) — no epoch/timezone call, both engines
     bit-agree."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     m = ev.agg(F.min("ts").alias("t0"))
     e = (ev.crossJoin(F.broadcast(m))
          .select("user_id", "event_id", "event_type",
@@ -1130,7 +1123,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets of the microsecond distance from the corpus min(ts)
     (broadcast 1-row) — pure relative arithmetic, timezone-free on
     either engine's timestamp flavor."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     m = ev.agg(F.min("ts").alias("t0"))
     e = (ev.crossJoin(F.broadcast(m))
          .select("user_id",
@@ -1187,7 +1180,7 @@ def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin additionally needs json_valid() first — DuckDB's
     json_extract_string ERRORS on malformed JSON where Spark's
     get_json_object returns null)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     ks = F.get_json_object("props", "$.k")
     # \A/\z, not ^/$: Java Matcher.find() lets '$' match just before a
     # final line terminator, so '12\n' would pass this guard while the
@@ -1254,7 +1247,7 @@ def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     every 'R' row in the order is that supplier's.  The supplier dim joins
     broadcast.  The ORACLE is deliberately the textbook correlated
     EXISTS / NOT EXISTS — the gate proves the single-pass rewrite."""
-    li = (_t(spark, sf_dir, "lineitem")
+    li = (read_table(spark, sf_dir, "lineitem")
           .select("l_orderkey", "l_suppkey", "l_returnflag"))
     is_r = F.col("l_returnflag") == "R"
     per_order = (li.groupBy("l_orderkey")
@@ -1268,7 +1261,7 @@ def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     sole = (per_order
             .filter((F.col("n_supp") >= 2) & (F.col("n_bad") == 1))
             .select(F.col("bad_supp").alias("s_suppkey"), "n_bad_rows"))
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (sole.join(F.broadcast(s), "s_suppkey")
             .groupBy("s_name")
             .agg(F.sum("n_bad_rows").cast("bigint").alias("numwait")))
@@ -1312,7 +1305,7 @@ def q_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end, and the above-average test is cross-multiplied
     (cents * n_pos > sum_cents) so neither engine ever divides — the
     boundary is decided in exact integer math."""
-    c = (_t(spark, sf_dir, "customer")
+    c = (read_table(spark, sf_dir, "customer")
          .select("c_custkey", "c_nationkey",
                  F.round(F.col("c_acctbal") * 100, 0).cast("bigint")
                  .alias("cents")))
@@ -1321,7 +1314,7 @@ def q_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.count(F.lit(1)).alias("n_pos"))
     rich = (c.crossJoin(F.broadcast(stats))
             .filter(F.col("cents") * F.col("n_pos") > F.col("sum_cents")))
-    ordered = (_t(spark, sf_dir, "orders")
+    ordered = (read_table(spark, sf_dir, "orders")
                .filter(F.col("o_orderdate") >= F.lit(IDLE_CUTOFF))
                .select("o_custkey").distinct())
     idle = rich.join(ordered, rich.c_custkey == ordered.o_custkey,
@@ -1364,7 +1357,7 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the event volume) and joins back broadcast.  Ordering is total
     and deterministic: (ts, event_id) — ts ties cannot reorder across
     engines.  Probability is integer ppm: count * 1e6 div row-total."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     steps = (ev.withColumn("prev_type", F.lag("event_type").over(w))
              .filter(F.col("prev_type").isNotNull()))
@@ -1416,7 +1409,7 @@ def q_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from BIGINT — so partial-agg order cannot change a single bit.
     The last reading of each user has no successor and integrates to
     zero weight (dropped), matching the oracle row-for-row."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     stepped = (ev.withColumn("next_ts", F.lead("ts").over(w))
                .filter(F.col("next_ts").isNotNull()))
@@ -1472,7 +1465,7 @@ def q_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, so the user's data is exchanged ONCE.  Exactness:
     interval ends are start + floor(value·1e6) integer MICROSECONDS —
     no float time math anywhere, bit-exact across engines."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     # NTZ-safe epoch micros: timestampdiff from the epoch literal (the
     # module's integer-microsecond time discipline; unix_micros rejects
     # the parquet NTZ type)
@@ -1544,11 +1537,11 @@ def q_priority_wait(spark: SparkSession, sf_dir: str) -> DataFrame:
     Counting after the semi join is one mergeable integer groupBy.  The
     ORACLE stays in correlated EXISTS form — the gate proves the
     semi-join de-correlation."""
-    o = (_t(spark, sf_dir, "orders")
+    o = (read_table(spark, sf_dir, "orders")
          .filter((F.col("o_orderdate") >= F.lit("1996-01-01"))
                  & (F.col("o_orderdate") < F.lit("1996-07-01")))
          .select("o_orderkey", "o_orderpriority"))
-    li = (_t(spark, sf_dir, "lineitem")
+    li = (read_table(spark, sf_dir, "lineitem")
           .filter(F.col("l_returnflag") == "R")
           .select("l_orderkey"))
     return (o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
@@ -1584,8 +1577,8 @@ def q_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit with no float fold anywhere.  Month keys are formatted
     from the stored timestamp (no session-timezone dependency — module
     time discipline)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = (_t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    p = (read_table(spark, sf_dir, "part")
          .select("p_partkey", (F.col("p_type") == "PROMO").alias("promo")))
     dp = F.col("l_extendedprice").cast("decimal(18,2)")
     dd = F.col("l_discount").cast("decimal(18,2)")
@@ -1641,7 +1634,7 @@ def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     four predicates and read only the three columns the aggregate needs
     (ReadSchema discipline).  revenue = price·discount accumulates in
     DECIMAL (exact, order-independent) and ships as integer 1e-4 units."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     dp = F.col("l_extendedprice").cast("decimal(18,2)")
     dd = F.col("l_discount").cast("decimal(18,2)")
     return (li.filter((F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -1682,8 +1675,8 @@ def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Boundary discipline: qty < avg/5 is cross-multiplied to
     5·qty·n < Σqty in exact BIGINTs (quantities are integral) — neither
     engine divides, so the threshold cannot straddle a float ulp."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = (_t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    p = (read_table(spark, sf_dir, "part")
          .filter(F.col("p_type") == "SMALL").select("p_partkey"))
     lif = (li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
            .select("l_partkey",
@@ -1727,9 +1720,9 @@ def q_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (l_returnflag != 'R') is factored OUT of the disjunction so it
     pushes to the fact scan and prunes before the join.  One exchange
     total (the 1-row reduce)."""
-    li = (_t(spark, sf_dir, "lineitem")
+    li = (read_table(spark, sf_dir, "lineitem")
           .filter(F.col("l_returnflag") != "R"))
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    p = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
     qty = F.col("l_quantity")
     cond = (((F.col("p_brand") == "Brand#1")
@@ -1773,7 +1766,7 @@ def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     — never a global sort and never a single-reducer window over all
     suppliers.  Ties all surface (exact integer units, so 'equal' is
     well-defined).  The supplier dim broadcasts for the name."""
-    li = (_t(spark, sf_dir, "lineitem")
+    li = (read_table(spark, sf_dir, "lineitem")
           .filter((F.col("l_shipdate") >= F.lit("1996-01-01"))
                   & (F.col("l_shipdate") < F.lit("1996-07-01"))))
     dp = F.col("l_extendedprice").cast("decimal(18,2)")
@@ -1783,7 +1776,7 @@ def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg((F.sum(rev) * 10000).cast("bigint")
                      .alias("total_units")))
     best = per_supp.agg(F.max("total_units").alias("mx"))
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (per_supp.join(F.broadcast(best),
                           per_supp.total_units == F.col("mx"))
             .join(F.broadcast(s), per_supp.l_suppkey == s.s_suppkey)
@@ -1820,7 +1813,7 @@ def q_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     result, broadcast back as a crossJoin; the threshold
     rev > total/n is cross-multiplied to rev·n > total in exact BIGINTs
     so neither engine divides.  The fact table is read once."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     dp = F.col("l_extendedprice").cast("decimal(18,2)")
     dd = F.col("l_discount").cast("decimal(18,2)")
     rev = dp * (F.lit(1).cast("decimal(18,2)") - dd)
@@ -1860,9 +1853,9 @@ WHERE rev_units * n_supp > total_units
 # entity — never a chain of three joins on the 10^12-row side.
 
 def _supp_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    s = read_table(spark, sf_dir, "supplier")
+    n = read_table(spark, sf_dir, "nation")
+    r = read_table(spark, sf_dir, "region")
     return (s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
             .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
             .select("s_suppkey", "s_name",
@@ -1871,9 +1864,9 @@ def _supp_region(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cust_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    c = read_table(spark, sf_dir, "customer")
+    n = read_table(spark, sf_dir, "nation")
+    r = read_table(spark, sf_dir, "region")
     return (c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
             .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
             .select("c_custkey", F.col("r_name").alias("cust_region")))
@@ -1905,9 +1898,9 @@ def q_min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORACLE stays correlated — the gate proves the de-correlation."""
     eur = _supp_region(spark, sf_dir).filter(
         F.col("supp_region") == "EUROPE").drop("supp_region")
-    p = (_t(spark, sf_dir, "part")
+    p = (read_table(spark, sf_dir, "part")
          .filter(F.col("p_size") <= 10).select("p_partkey"))
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey",
         (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
         .cast("bigint").alias("price_units"))
@@ -1953,10 +1946,10 @@ def q_region_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     The pair disjunction evaluates post-join in the same stage — it must
     not break the equi joins.  Year keys come from the stored timestamp
     (no session-timezone dependency)."""
-    li = (_t(spark, sf_dir, "lineitem")
+    li = (read_table(spark, sf_dir, "lineitem")
           .filter((F.col("l_shipdate") >= F.lit("1996-01-01"))
                   & (F.col("l_shipdate") < F.lit("1998-01-01"))))
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     sup = (_supp_region(spark, sf_dir)
            .select("s_suppkey", "supp_region"))
     cus = _cust_region(spark, sf_dir)
@@ -2016,9 +2009,9 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     numerator is a when() inside the same groupBy, not a second pass) —
     one exchange computes both numerator and denominator, then an exact
     integer division to ppm."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    p = (_t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    p = (read_table(spark, sf_dir, "part")
          .filter(F.col("p_type") == "STANDARD").select("p_partkey"))
     sup = _supp_region(spark, sf_dir).select("s_suppkey", "supp_region")
     cus = (_cust_region(spark, sf_dir)
@@ -2095,8 +2088,8 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer 1e-4 units BEFORE the rollup, so the aggregate is one
     mergeable integer sum — no decimal mixing across partial aggregates.
     One exchange (the nation×year rollup)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = (_t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    p = (read_table(spark, sf_dir, "part")
          .filter(F.col("p_name").like("%bolt%"))
          .select("p_partkey",
                  (F.col("p_retailprice").cast("decimal(18,2)") * 10000)
@@ -2151,12 +2144,12 @@ def q_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     as TWO mergeable aggregates — dedupe (brand,type,size,suppkey)
     first (map-side partial dedup), then a plain count — never an
     expensive distinct inside a single aggregate at 10^12 rows."""
-    bad = (_t(spark, sf_dir, "supplier")
+    bad = (read_table(spark, sf_dir, "supplier")
            .filter(F.col("s_acctbal") < 2000).select("s_suppkey"))
-    p = (_t(spark, sf_dir, "part")
+    p = (read_table(spark, sf_dir, "part")
          .filter(F.col("p_type") != "PROMO")
          .select("p_partkey", "p_brand", "p_type", "p_size"))
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    li = read_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     pairs = (li.join(F.broadcast(bad), li.l_suppkey == bad.s_suppkey,
                      "left_anti")
              .join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -2193,9 +2186,9 @@ def q_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the broadcast dim fold.  Quantities are exact BIGINTs; 2·qty_ps >
     qty_p needs no division.  The ORACLE keeps the correlated IN +
     scalar-subquery form — the gate proves the flattening."""
-    promo = (_t(spark, sf_dir, "part")
+    promo = (read_table(spark, sf_dir, "part")
              .filter(F.col("p_type") == "PROMO").select("p_partkey"))
-    li = (_t(spark, sf_dir, "lineitem")
+    li = (read_table(spark, sf_dir, "lineitem")
           .filter((F.col("l_shipdate") >= F.lit("1997-01-01"))
                   & (F.col("l_shipdate") < F.lit("1998-01-01")))
           .select("l_partkey", "l_suppkey",

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ._scan import fan_out
+from ._scan import read_table
 
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is"],
@@ -23,8 +23,7 @@ BPE_ISH_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"),
-                   f"{sf_dir}/documents.parquet")
+    return read_table(spark, sf_dir, "documents")
 
 
 def _count_occurrences(padded, word: str):

@@ -33,19 +33,16 @@ Two interchangeable parse engines produce the identical `parsed` schema:
                         not SQL-expressible.  Same contract, tested for
                         parity; see the stage-2b commentary for why the
                         kernel avoids Python-object materialization.
-* ``engine="pandas"`` — the same mapInArrow stage via a pandas-object
-                        kernel (comparison engine; object churn measured).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from . import contract as C
-from .functions import cleaning as X
 
 # The parsed schema is NARROW by design: one (kind, text, media_ref) per
 # span plus a `scan_only` flag, NOT parallel fast_*/full_* column pairs.
@@ -63,14 +60,14 @@ PARSED_DDL = ("doc_id string, page int, block int, "
 # measured 47 tasks on 32 cores = 2 scheduling waves with the second wave
 # half empty (~30% of the cluster idle).  cores × WAVES gives every core
 # WAVES uniform task slots, so the tail is one short task, not half a wave.
-# A cluster submit can override via spark.document_processor.parse.factor.
+# The ceiling counts at least 8 cores, so small hosts still get 8 × WAVES.
 #
 # The count is additionally SIZE-AWARE: cores × factor is the ceiling for
 # big inputs, but a small input stops at one task per ~TARGET bytes (floor:
 # one task per core).  Without the cap, a sf0.1 bench corpus paid 192 tasks
 # of scheduling overhead on work that fits a single 32-task wave (measured
-# +44% on the small-scale extract; the interleaved A/B diagnostic in
-# BENCH/diag_arrow_interleaved.py isolates the per-task cost).
+# +44% on the small-scale extract; the interleaved A/B diagnostic that
+# isolated the per-task cost is in git history, not in the tree).
 _PARSE_WAVE_FACTOR = 6
 # mapInArrow tasks each pay a fixed Python-worker round trip (stream
 # open/close + first-batch latency, measured ~11 ms/task on this host), so
@@ -119,13 +116,12 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def _parse_partitions(df: DataFrame, factor: int | None = None) -> int:
-    sess = df.sparkSession
-    cores = sess.sparkContext.defaultParallelism
-    if factor is None:
-        factor = int(sess.conf.get(
-            "spark.document_processor.parse.factor", str(_PARSE_WAVE_FACTOR)))
-    upper = max(cores * factor, 48)
+def _parse_partitions(df: DataFrame, factor: int = _PARSE_WAVE_FACTOR) -> int:
+    """Explicit partition count for the (doc_id, page) parse shuffle:
+    one task per _TARGET_PARTITION_BYTES of plan size, at least one per
+    core, at most `factor` waves."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    upper = factor * max(cores, 8)
     size = _plan_size_bytes(df)
     if size is None:
         return upper
@@ -134,18 +130,7 @@ def _parse_partitions(df: DataFrame, factor: int | None = None) -> int:
 
 
 def _arrow_partitions(df: DataFrame) -> int:
-    sess = df.sparkSession
-    cores = sess.sparkContext.defaultParallelism
-    factor = int(sess.conf.get(
-        "spark.document_processor.parse.arrow_factor", str(_ARROW_WAVE_FACTOR)))
-    upper = max(cores * factor, 16)
-    size = _plan_size_bytes(df)
-    if size is None:
-        return upper
-    need = -(-size // _TARGET_PARTITION_BYTES)
-    return max(min(upper, need), cores)
-
-OUTPUT_SPAN_DDL = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    return _parse_partitions(df, _ARROW_WAVE_FACTOR)
 
 
 # ---------------------------------------------------------------------------
@@ -248,10 +233,6 @@ def explode_spans(docs: DataFrame, first_page: int = 1,
 # stage 2a — native-Catalyst parse (fast + full variants per span)
 # ---------------------------------------------------------------------------
 
-def _null_str() -> Column:
-    return F.lit(None).cast("string")
-
-
 def parse_sql(rows: DataFrame) -> DataFrame:
     """Per-span extraction as pure Catalyst expressions, two stages:
 
@@ -349,114 +330,6 @@ def parse_sql(rows: DataFrame) -> DataFrame:
         f"CASE WHEN raw_kind = '{C.RAW_MEDIA}' THEN raw_media_ref END"
         " AS media_ref",
         f"coalesce(raw_kind = '{C.RAW_PDF_SCAN}', false) AS scan_only")
-
-
-def parse_sql_union(rows: DataFrame) -> DataFrame:
-    """Union-of-filtered-branches variant (kept for comparison)."""
-    text = F.col("raw_text")
-    keys = ["doc_id", "page", "block"]
-
-    def out(df: DataFrame, k: Column, t: Column, m: Column,
-            scan: bool = False) -> DataFrame:
-        return df.select(
-            *keys,
-            k.cast("string").alias("kind"),
-            t.cast("string").alias("text"),
-            m.cast("string").alias("media_ref"),
-            F.lit(scan).alias("scan_only"))
-
-    ns = F.lit(None).cast("string")
-
-    # pdf_text → both pipelines
-    t = rows.filter(F.col("raw_kind") == C.RAW_PDF_TEXT)
-    t_clean = X.clean_text_col(text)
-    t_ok = t_clean != ""
-    b_text = out(t, F.when(t_ok, X.classify_textual_col(t_clean)),
-                 F.when(t_ok, t_clean), ns)
-
-    # pdf_scan → full pipeline only (T4): scan_only marks the rows the fast
-    # pass cannot see
-    s = rows.filter(F.col("raw_kind") == C.RAW_PDF_SCAN)
-    s_decoded = X.decode_scan_col(text)
-    s_clean = F.when(s_decoded.isNotNull(), X.clean_text_col(s_decoded))
-    s_ok = s_clean.isNotNull() & (s_clean != "")
-    b_scan = out(s, F.when(s_ok, X.classify_textual_col(s_clean)),
-                 F.when(s_ok, s_clean), ns, scan=True)
-
-    # html → boilerplate strip by text-density
-    h = rows.filter(F.col("raw_kind") == C.RAW_HTML)
-    h_raw = F.coalesce(text, F.lit(""))
-    h_clean = X.clean_text_col(X.strip_tags_col(h_raw))
-    h_main = (h_clean != "") & (
-        X.html_density_col(h_raw, h_clean) >= F.lit(C.HTML_DENSITY_THRESHOLD))
-    h_kind = (F.when(h_main & X.html_is_heading_col(h_raw), F.lit(C.KIND_HEADING))
-               .when(h_main, F.lit(C.KIND_PARAGRAPH)))
-    b_html = out(h, h_kind, F.when(h_main, h_clean), ns)
-
-    # table_raw → canonical flattening (T6)
-    tb = rows.filter(F.col("raw_kind") == C.RAW_TABLE)
-    tb_flat = X.flatten_table_col(text)
-    tb_ok = ~X.is_blank_col(tb_flat)
-    b_table = out(tb, F.when(tb_ok, F.lit(C.KIND_TABLE)),
-                  F.when(tb_ok, tb_flat), ns)
-
-    # media → figure / media_ref (T7)
-    m = rows.filter(F.col("raw_kind") == C.RAW_MEDIA)
-    m_alt = F.when(text.isNotNull(), X.clean_text_col(text)).otherwise(F.lit(""))
-    m_is_fig = m_alt != ""
-    m_kind = F.when(m_is_fig, F.lit(C.KIND_FIGURE)).otherwise(F.lit(C.KIND_MEDIA_REF))
-    b_media = out(m, m_kind, F.when(m_is_fig, m_alt), F.col("raw_media_ref"))
-
-    # unknown raw kinds: keep the row (page inventory) but emit nothing (S28)
-    known = [C.RAW_PDF_TEXT, C.RAW_PDF_SCAN, C.RAW_HTML, C.RAW_TABLE, C.RAW_MEDIA]
-    u = rows.filter(~F.col("raw_kind").isin(*known) | F.col("raw_kind").isNull())
-    b_unknown = out(u, ns, ns, ns)
-
-    return (b_text.unionByName(b_scan).unionByName(b_html)
-            .unionByName(b_table).unionByName(b_media).unionByName(b_unknown))
-
-
-def parse_sql_fused(rows: DataFrame) -> DataFrame:
-    """Single-projection variant of parse_sql: one pass over the exploded
-    rows (no 6× re-explode), kind dispatch via lazy CASE branches."""
-    kind = F.col("raw_kind")
-    text = F.col("raw_text")
-    mref = F.col("raw_media_ref")
-
-    t_clean = X.clean_text_col(text)
-    s_decoded = X.decode_scan_col(text)
-    s_clean = F.when(s_decoded.isNotNull(), X.clean_text_col(s_decoded))
-    s_ok = s_clean.isNotNull() & (s_clean != "")
-    h_raw = F.coalesce(text, F.lit(""))
-    h_clean = X.clean_text_col(X.strip_tags_col(h_raw))
-    h_main = (h_clean != "") & (
-        X.html_density_col(h_raw, h_clean) >= F.lit(C.HTML_DENSITY_THRESHOLD))
-    h_kind = (F.when(h_main & X.html_is_heading_col(h_raw), F.lit(C.KIND_HEADING))
-               .when(h_main, F.lit(C.KIND_PARAGRAPH)))
-    tb_flat = X.flatten_table_col(text)
-    tb_ok = ~X.is_blank_col(tb_flat)
-    m_alt = F.when(text.isNotNull(), X.clean_text_col(text)).otherwise(F.lit(""))
-    m_is_fig = m_alt != ""
-
-    k = (F.when(kind == C.RAW_PDF_TEXT,
-                F.when(t_clean != "", X.classify_textual_col(t_clean)))
-          .when(kind == C.RAW_PDF_SCAN,
-                F.when(s_ok, X.classify_textual_col(s_clean)))
-          .when(kind == C.RAW_HTML, h_kind)
-          .when(kind == C.RAW_TABLE, F.when(tb_ok, F.lit(C.KIND_TABLE)))
-          .when(kind == C.RAW_MEDIA,
-                F.when(m_is_fig, F.lit(C.KIND_FIGURE))
-                 .otherwise(F.lit(C.KIND_MEDIA_REF))))
-    t = (F.when(kind == C.RAW_PDF_TEXT, F.when(t_clean != "", t_clean))
-          .when(kind == C.RAW_PDF_SCAN, F.when(s_ok, s_clean))
-          .when(kind == C.RAW_HTML, F.when(h_main, h_clean))
-          .when(kind == C.RAW_TABLE, F.when(tb_ok, tb_flat))
-          .when(kind == C.RAW_MEDIA, F.when(m_is_fig, m_alt)))
-    m = F.when(kind == C.RAW_MEDIA, mref)
-    return rows.select(
-        "doc_id", "page", "block",
-        k.alias("kind"), t.alias("text"), m.alias("media_ref"),
-        F.coalesce(kind == C.RAW_PDF_SCAN, F.lit(False)).alias("scan_only"))
 
 
 # ---------------------------------------------------------------------------
@@ -629,101 +502,6 @@ def _parse_arrow_batch(batch) -> Iterator["object"]:
                   None, False)
 
 
-def _parse_pandas_batch(pdf):
-    """Pandas-object variant of the kernel (narrow schema), kept as the
-    reference shape for parsers whose vectorized library wants pandas in
-    (and for an honest A/B of object-materialization cost — see
-    BENCH/diag_kernel_scaling.py).  Not on the default engine path."""
-    import numpy as np
-    import pandas as pd
-
-    from . import contract as Ct
-
-    n = len(pdf)
-    kind = pdf["raw_kind"].fillna("").to_numpy(dtype=object)
-    text_notnull = pdf["raw_text"].notna().to_numpy()
-    raw = pdf["raw_text"].fillna("").reset_index(drop=True)
-    mref = pdf["raw_media_ref"].to_numpy(dtype=object)
-
-    def clean(s: "pd.Series") -> "pd.Series":
-        s = s.str.replace(Ct.GLYPH_PATTERN, " ", regex=True)
-        s = s.str.replace(Ct.SPACE_TAB_PATTERN, " ", regex=True)
-        return s.str.replace(Ct.STRIP_PATTERN, "", regex=True)
-
-    def classify(cleaned: "pd.Series") -> "np.ndarray":
-        heads = cleaned.str.startswith(Ct.HEADING_MARKERS).to_numpy()
-        return np.where(heads, Ct.KIND_HEADING, Ct.KIND_PARAGRAPH)
-
-    out = {c: np.full(n, None, dtype=object)
-           for c in ("kind", "text", "media_ref")}
-    scan_only = np.zeros(n, dtype=bool)
-
-    def emit(idx, kinds, texts, refs=None):
-        out["kind"][idx] = kinds
-        out["text"][idx] = texts
-        if refs is not None:
-            out["media_ref"][idx] = refs
-
-    # pdf_text
-    pos = np.flatnonzero(kind == Ct.RAW_PDF_TEXT)
-    if pos.size:
-        cl = clean(raw.iloc[pos].reset_index(drop=True))
-        ok = (cl != "").to_numpy()
-        keep = pos[ok]
-        clk = cl.iloc[np.flatnonzero(ok)].reset_index(drop=True)
-        emit(keep, classify(clk), clk.to_numpy(dtype=object))
-
-    # pdf_scan → scan_only rows (T4)
-    pos = np.flatnonzero(kind == Ct.RAW_PDF_SCAN)
-    if pos.size:
-        scan_only[pos] = True
-        decoded = raw.iloc[pos].map(Ct.decode_scan).reset_index(drop=True)
-        dn = decoded.notna().to_numpy()
-        cl = clean(decoded.fillna("").astype(str))
-        ok = dn & (cl != "").to_numpy()
-        keep = pos[ok]
-        clk = cl.iloc[np.flatnonzero(ok)].reset_index(drop=True)
-        emit(keep, classify(clk), clk.to_numpy(dtype=object))
-
-    # html
-    pos = np.flatnonzero(kind == Ct.RAW_HTML)
-    if pos.size:
-        h = raw.iloc[pos].reset_index(drop=True)
-        cl = clean(h.str.replace(Ct.HTML_TAG_PATTERN, " ", regex=True))
-        hlen = h.str.len().to_numpy().astype(float)
-        dens = np.divide(cl.str.len().to_numpy(), hlen,
-                         out=np.zeros(len(pos)), where=hlen > 0)
-        main = (cl != "").to_numpy() & (dens >= Ct.HTML_DENSITY_THRESHOLD)
-        keep = pos[main]
-        sel = np.flatnonzero(main)
-        is_h = h.iloc[sel].str.contains(Ct.HTML_HEADING_PATTERN, regex=True).to_numpy()
-        kinds = np.where(is_h, Ct.KIND_HEADING, Ct.KIND_PARAGRAPH)
-        emit(keep, kinds, cl.iloc[sel].to_numpy(dtype=object))
-
-    # table_raw
-    pos = np.flatnonzero(kind == Ct.RAW_TABLE)
-    if pos.size:
-        flat = raw.iloc[pos].map(Ct.flatten_table).reset_index(drop=True)
-        ok = (flat.str.strip() != "").to_numpy()
-        keep = pos[ok]
-        emit(keep, Ct.KIND_TABLE,
-             flat.iloc[np.flatnonzero(ok)].to_numpy(dtype=object))
-
-    # media
-    pos = np.flatnonzero(kind == Ct.RAW_MEDIA)
-    if pos.size:
-        alt = clean(raw.iloc[pos].reset_index(drop=True))
-        has_alt = text_notnull[pos] & (alt != "").to_numpy()
-        kinds = np.where(has_alt, Ct.KIND_FIGURE, Ct.KIND_MEDIA_REF)
-        texts = np.where(has_alt, alt.to_numpy(dtype=object), None)
-        emit(pos, kinds, texts, refs=mref[pos])
-
-    return pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(dtype=object),
-                         "page": pdf["page"].to_numpy(),
-                         "block": pdf["block"].to_numpy(), **out,
-                         "scan_only": scan_only})
-
-
 def parse_arrow(rows: DataFrame) -> DataFrame:
     def fn(batches: Iterator["object"]) -> Iterator["object"]:
         for batch in batches:
@@ -735,58 +513,12 @@ def parse_arrow(rows: DataFrame) -> DataFrame:
             .mapInArrow(fn, PARSED_DDL))
 
 
-def parse_pandas(rows: DataFrame) -> DataFrame:
-    """mapInArrow via the pandas-object kernel (comparison engine)."""
-    import pyarrow as pa
-
-    def fn(batches: Iterator["object"]) -> Iterator["object"]:
-        schema = pa.schema([
-            pa.field("doc_id", pa.string()), pa.field("page", pa.int32()),
-            pa.field("block", pa.int32()), pa.field("kind", pa.string()),
-            pa.field("text", pa.string()),
-            pa.field("media_ref", pa.string()),
-            pa.field("scan_only", pa.bool_()),
-        ])
-        for batch in batches:
-            res = _parse_pandas_batch(batch.to_pandas())
-            yield pa.RecordBatch.from_pandas(res, schema=schema,
-                                             preserve_index=False)
-
-    return (rows.repartition(_arrow_partitions(rows), "doc_id", "page")
-            .mapInArrow(fn, PARSED_DDL))
-
-
 # ---------------------------------------------------------------------------
 # stage 3 — shared assembly: fallback decision, ordering, renumbering
 # ---------------------------------------------------------------------------
 
-def _cmp_int(*keys):
-    """array_sort comparator on one or two int fields: the generated
-    comparator stays tiny.  (sort_array over nested struct arrays makes
-    Catalyst generate and janino-compile a full deep-structural comparator —
-    minutes of compile time serialized behind the codegen cache lock, with
-    every executor thread blocked on it.)"""
-    def cmp(a, b):
-        c = F.lit(0)
-        for key in reversed(keys):
-            c = (F.when(a[key] < b[key], F.lit(-1))
-                  .when(a[key] > b[key], F.lit(1))
-                  .otherwise(c))
-        return c
-    return cmp
-
-
 # must mirror oracle.span_tiebreak exactly (crc32 over the same key string)
 _TIE_NULL = "\x02"
-
-
-def _tiebreak_col() -> Column:
-    key = F.concat_ws(
-        "\x1f",
-        F.col("kind"),
-        F.coalesce(F.col("text"), F.lit(_TIE_NULL)),
-        F.coalesce(F.col("media_ref"), F.lit(_TIE_NULL)))
-    return F.crc32(F.encode(key, "UTF-8"))
 
 
 def assemble(parsed: DataFrame, with_layout: bool = False,
@@ -835,6 +567,8 @@ def assemble(parsed: DataFrame, with_layout: bool = False,
     else:
         chosen = f"CASE WHEN has_text = 1 THEN {fast_subset} ELSE arr END"
         fallback = "1 - has_text"
+    # explicit int comparators, not sort_array: sort_array over nested
+    # structs makes Catalyst compile a deep comparator behind the codegen lock
     cmp_block_tb = ("(a, b) -> CASE WHEN a.block < b.block THEN -1 "
                     "WHEN a.block > b.block THEN 1 ELSE "
                     "CASE WHEN a.tb < b.tb THEN -1 "
@@ -902,9 +636,28 @@ def assemble(parsed: DataFrame, with_layout: bool = False,
 # public API
 # ---------------------------------------------------------------------------
 
-ENGINES = {"sql": parse_sql, "sql_union": parse_sql_union,
-           "sql_fused": parse_sql_fused, "arrow": parse_arrow,
-           "pandas": parse_pandas}
+ENGINES = {"sql": parse_sql, "arrow": parse_arrow}
+
+
+def check_engine(engine: str) -> None:
+    """ValueError for an engine not in ENGINES.  Entry points call it before
+    building a plan, running a Spark action or touching storage."""
+    if engine not in ENGINES:
+        raise ValueError(f"unknown engine {engine!r}; "
+                         f"valid engines: {sorted(ENGINES)}")
+
+
+def extract_detailed(docs: DataFrame, engine: str = "sql",
+                     with_layout: bool = False, first_page: int = 1,
+                     last_page: int | None = None,
+                     ocr_pipeline: str = "hybrid") -> DataFrame:
+    """The one extraction plan: explode → parse → assemble.  Returns the
+    doc-level frame (doc_id, spans, fallback_pages, pages_in), docs with
+    zero surviving spans included.  The stages are looked up as module
+    globals at call time, so wrapping them (tracing) reaches every caller."""
+    check_engine(engine)
+    parsed = ENGINES[engine](explode_spans(docs, first_page, last_page))
+    return assemble(parsed, with_layout=with_layout, ocr_pipeline=ocr_pipeline)
 
 
 def extract_documents(docs: DataFrame, engine: str = "sql",
@@ -919,9 +672,8 @@ def extract_documents(docs: DataFrame, engine: str = "sql",
     output, exactly as the reference numbers only the processed pages.
     ocr_pipeline selects the converter chain (fast/full/hybrid — see
     assemble)."""
-    parsed = ENGINES[engine](explode_spans(docs, first_page, last_page))
-    return (assemble(parsed, with_layout=with_layout,
-                     ocr_pipeline=ocr_pipeline)
+    return (extract_detailed(docs, engine, with_layout, first_page,
+                             last_page, ocr_pipeline)
             .filter(F.size("spans") > 0)
             .select("doc_id", "spans"))
 
@@ -942,8 +694,9 @@ def extract_with_metrics(docs: DataFrame, engine: str = "sql",
          .alias("empty_docs"),
         F.expr("sum(size(spans))").alias("spans_in"),
     )
-    parsed = ENGINES[engine](explode_spans(docs, first_page, last_page))
-    doc_level = assemble(parsed, ocr_pipeline=ocr_pipeline)
+    doc_level = extract_detailed(docs, engine, first_page=first_page,
+                                 last_page=last_page,
+                                 ocr_pipeline=ocr_pipeline)
     out_obs = Observation("extract_output")
     doc_level = doc_level.observe(
         out_obs,

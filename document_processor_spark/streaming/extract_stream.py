@@ -24,8 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import pipeline
 from ..fixtures import INPUT_DDL
-from ..io.icelite import IceLite, with_part
-from ..job import SPANS_TABLE
+from ..io.icelite import IceLite
+from ..job import SPANS_TABLE, snapshot_rows
 
 
 def make_batch_processor(table: IceLite, run_id: str, engine: str,
@@ -44,14 +44,8 @@ def make_batch_processor(table: IceLite, run_id: str, engine: str,
             if (s.get("stream_run_id") == run_id
                     and s.get("streaming_batch_id") == batch_id):
                 return  # replayed batch: snapshot already committed
-        parsed = pipeline.ENGINES[engine](pipeline.explode_spans(batch_df))
-        detailed = with_part(pipeline.assemble(parsed), n_parts)
-        from pyspark.sql import functions as F
-        skip_reason = (F.when(F.size("spans") > 0, F.lit(None).cast("string"))
-                        .otherwise(F.lit("no_extractable_content")))
-        result = detailed.select("doc_id", "spans", "fallback_pages",
-                                 "pages_in", skip_reason.alias("skip_reason"),
-                                 "part")
+        result = snapshot_rows(
+            pipeline.extract_detailed(batch_df, engine), n_parts)
         table.append(result, run_id=f"{run_id}-b{batch_id}",
                      extra={"engine": engine, "n_parts": n_parts,
                             "stream_run_id": run_id,
@@ -70,6 +64,7 @@ def start_extract_stream(spark: SparkSession, input_dir: str, warehouse: str,
                          max_files_per_trigger: int | None = None):
     """Start the streaming extraction job over a directory of parquet files
     with the input schema.  Returns the StreamingQuery."""
+    pipeline.check_engine(engine)
     reader = (spark.readStream.schema(INPUT_DDL)
               .option("maxFilesPerTrigger", max_files_per_trigger or 16)
               .parquet(input_dir))

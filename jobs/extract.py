@@ -22,6 +22,8 @@ import sys
 
 
 def main(argv: list[str] | None = None) -> int:
+    from document_processor_spark import pipeline
+
     ap = argparse.ArgumentParser()
     src = ap.add_mutually_exclusive_group(required=True)
     src.add_argument("--input", help="parquet path with (doc_id, spans)")
@@ -29,7 +31,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--warehouse", required=True)
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--n-parts", type=int, default=32)
-    ap.add_argument("--engine", choices=("sql", "arrow"), default="sql")
+    ap.add_argument("--engine", choices=sorted(pipeline.ENGINES), default="sql")
     ap.add_argument("--partitions-per-commit", type=int, default=None)
     ap.add_argument("--max-commits", type=int, default=None)
     ap.add_argument("--cores", type=int, default=None)

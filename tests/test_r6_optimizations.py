@@ -9,8 +9,8 @@ claims:
   equality on real corpus text);
 * the single-parse SQL-string shingle/minhash/cosine expressions == their
   former Column forms (kept inline here as the reference);
-* fan_out keeps the local fan-out for single-split fixtures and skips the
-  shuffle for inputs that already scan wide;
+* read_table keeps the local fan-out for single-split fixtures and skips
+  the shuffle for inputs that already scan wide;
 * the zero-exchange extract path (input pre-partitioned by doc_id) equals
   the repartition path byte-for-byte.
 """
@@ -147,25 +147,62 @@ def test_cosine_bucket_sql_string_equals_column_form(spark):
         assert rows and all(r["got"] == r["ref"] for r in rows)
 
 
-# -- fan_out ------------------------------------------------------------------
+# -- read_table ---------------------------------------------------------------
 
-def test_fan_out_repartitions_single_split_and_skips_wide(spark):
-    from document_processor_spark.operators._scan import (_max_partition_bytes,
-                                                          fan_out)
-    path = "/root/testdata/sf0.01/documents.parquet"
-    df = spark.read.parquet(path)
-    # tiny single-split fixture: fan-out keeps the explicit repartition
-    fanned = fan_out(df, path)
-    assert ("Repartition" in fanned._jdf.queryExecution().logical().toString()
-            or fanned.rdd.getNumPartitions()
-            == spark.sparkContext.defaultParallelism)
-    # a path that scans at least one split per core: no repartition added
-    import document_processor_spark.operators._scan as scan_mod
+def _round_robin_exchanges(df) -> int:
+    """RoundRobin shuffle exchanges in the physical plan, counted by
+    walking the plan tree."""
+    def walk(node) -> int:
+        n = int(node.getClass().getSimpleName() == "ShuffleExchangeExec"
+                and node.outputPartitioning().getClass().getSimpleName()
+                == "RoundRobinPartitioning")
+        kids = node.children()
+        return n + sum(walk(kids.apply(i)) for i in range(kids.length()))
+    return walk(df._jdf.queryExecution().sparkPlan())
+
+
+def test_read_table_repartitions_single_split_and_skips_wide(spark, tmp_path):
+    from document_processor_spark.operators._scan import read_table
     cores = spark.sparkContext.defaultParallelism
-    big = cores * _max_partition_bytes(spark)
-    scan_mod._SIZE_CACHE["/synthetic/huge.parquet"] = big
-    wide = fan_out(df, "/synthetic/huge.parquet")
-    assert wide is df
+    # tiny single-split fixture: the explicit repartition is kept
+    fanned = read_table(spark, "/root/testdata/sf0.01", "documents")
+    assert _round_robin_exchanges(fanned) == 1
+    # a real multi-split input: a table scanned in at least one split per
+    # core gets no repartition
+    (spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+     .repartition(cores).write.parquet(str(tmp_path / "wide.parquet")))
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        wide = read_table(spark, str(tmp_path), "wide")
+        assert wide.rdd.getNumPartitions() >= cores
+        assert _round_robin_exchanges(wide) == 0
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_read_table_sizes_partitioned_dirs_recursively(spark, tmp_path):
+    """A nested partitionBy layout is sized over every file, not just the
+    top level, from Spark's own file-index statistic."""
+    from document_processor_spark.operators._scan import read_table
+    path = tmp_path / "documents.parquet"
+    (spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+     .write.partitionBy("source", "lang").parquet(str(path)))
+    files = list(path.rglob("*.parquet"))
+    assert files and all(f.parent.parent.parent == path for f in files)
+    on_disk = sum(f.stat().st_size for f in files)
+    assert pipeline._plan_size_bytes(spark.read.parquet(str(path))) == on_disk
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    # every byte counts: one split per core exactly fits the whole tree
+    cores = spark.sparkContext.defaultParallelism
+    spark.conf.set(key, str(on_disk // cores))
+    try:
+        assert _round_robin_exchanges(read_table(spark, str(tmp_path),
+                                                 "documents")) == 0
+    finally:
+        spark.conf.set(key, old)
 
 
 # -- double-eval pins (lsh_recall / fuzzy_decontaminate / prefix_jaccard) ----
