@@ -18,18 +18,34 @@ BEFORE the manifest; the manifest is written to a temp file and atomically
 renamed; CURRENT is updated last.  A crash mid-write leaves orphan data files
 that no manifest references — invisible to readers, exactly Iceberg's model.
 Readers list data directories from manifests only, never by globbing.
+
+A commit writes its manifest once, complete:
+
+* ``schema`` — the written frame's schema (``part`` included), Iceberg's
+  per-snapshot schema in table metadata.  Readers open each snapshot dir
+  with it, so opening a table runs no schema-inference job; a manifest
+  without it is opened by inference.
+* ``partitions`` — per-partition lineage and metrics.  ``append`` accepts
+  them as a callable, resolved after the data write and before the
+  manifest rename, so counters an Observation collects during the write
+  itself land in the same manifest: a committed snapshot never waits for a
+  second pass to get its lineage.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
+from collections.abc import Callable
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 PART_COL = "part"
 
@@ -73,8 +89,25 @@ class IceLite:
 
     # -- write path -----------------------------------------------------------
 
+    def _commit(self, manifest: dict) -> dict:
+        """Land one snapshot's manifest (tmp file + atomic rename), then
+        advance CURRENT to it the same way."""
+        sid = manifest["snapshot_id"]
+        self._write_manifest(manifest)
+        tmp_cur = self.meta / f".CURRENT.{uuid.uuid4().hex}.tmp"
+        tmp_cur.write_text(str(sid))
+        os.replace(tmp_cur, self.meta / "CURRENT")
+        return manifest
+
+    def _write_manifest(self, manifest: dict) -> None:
+        sid = manifest["snapshot_id"]
+        tmp = self.meta / f".v{sid}.json.{uuid.uuid4().hex}.tmp"
+        tmp.write_text(json.dumps(manifest, indent=2))
+        os.replace(tmp, self.meta / f"v{sid}.json")
+
     def append(self, df: DataFrame, run_id: str,
-               metrics: dict[int, dict] | None = None,
+               metrics: dict[int, dict] | Callable[[], dict[int, dict]]
+               | None = None,
                partitions: list[int] | None = None,
                extra: dict | None = None,
                cluster_by: list[str] | None = None) -> dict:
@@ -85,6 +118,10 @@ class IceLite:
         superset of the partition dirs actually written (a bucket whose every
         document was skipped produces no data file but IS done — it must not
         be reprocessed on resume).
+
+        `metrics` may be a callable: it is called after the data write and
+        before the manifest is written, so values an Observation on `df`
+        collects during the write go into this commit's manifest.
 
         `cluster_by` sorts rows WITHIN each write task before the parquet
         encoder sees them (Iceberg's write.sort-order analog): row groups
@@ -105,6 +142,8 @@ class IceLite:
         (df.write.mode("errorifexists")
            .partitionBy(PART_COL)
            .parquet(str(out_dir)))
+        if callable(metrics):
+            metrics = metrics()
         extra = {**(extra or {})}
         if cluster_by:
             # Recorded in the manifest (Iceberg's write.sort-order lives in
@@ -122,53 +161,49 @@ class IceLite:
             "run_id": run_id,
             "committed_at": time.time(),
             "data_dir": rel,
+            "schema": df.schema.jsonValue(),
             "partitions": {str(p): (metrics or {}).get(p, {}) for p in parts},
             **(extra or {}),
         }
-        tmp = self.meta / f".v{sid}.json.{uuid.uuid4().hex}.tmp"
-        tmp.write_text(json.dumps(manifest, indent=2))
-        os.replace(tmp, self.meta / f"v{sid}.json")
-        tmp_cur = self.meta / f".CURRENT.{uuid.uuid4().hex}.tmp"
-        tmp_cur.write_text(str(sid))
-        os.replace(tmp_cur, self.meta / "CURRENT")
-        return manifest
-
-    def _rewrite_manifest(self, snapshot_id: int, mutate) -> None:
-        """Atomic read-mutate-replace of one committed manifest — the one
-        place the rewrite protocol (tmp file + os.replace) lives."""
-        p = self.meta / f"v{snapshot_id}.json"
-        manifest = json.loads(p.read_text())
-        mutate(manifest)
-        tmp = self.meta / f".v{snapshot_id}.json.{uuid.uuid4().hex}.tmp"
-        tmp.write_text(json.dumps(manifest, indent=2))
-        os.replace(tmp, p)
+        return self._commit(manifest)
 
     def update_metrics(self, snapshot_id: int, metrics: dict[int, dict]) -> None:
-        """Fill per-partition metrics on an already-committed manifest
-        (atomic rewrite).  Kept separate from append() so the data commit —
-        the correctness-critical step — never waits on metric aggregation."""
-        def mutate(manifest):
-            for part, m in metrics.items():
-                manifest["partitions"][str(part)] = m
-        self._rewrite_manifest(snapshot_id, mutate)
-
-    def update_manifest(self, snapshot_id: int, extra: dict) -> None:
-        """Merge run-level metadata into an already-committed manifest
-        (atomic rewrite) — for values only computable after the commit's
-        write action, e.g. Observation-carried stage counters."""
-        self._rewrite_manifest(snapshot_id, lambda m: m.update(extra))
+        """Replace per-partition metrics on an already-committed manifest
+        (atomic rewrite), for lineage computed after the commit."""
+        manifest = json.loads((self.meta / f"v{snapshot_id}.json").read_text())
+        for part, m in metrics.items():
+            manifest["partitions"][str(part)] = m
+        self._write_manifest(manifest)
 
     # -- read path ------------------------------------------------------------
+
+    def _open(self, spark: SparkSession, snaps: list[dict]) -> DataFrame | None:
+        """One scan per snapshot dir, unioned by name (None if none of them
+        holds rows).  Each dir is its own partitioned dataset (part=k
+        subdirs): Spark refuses one read over several partition roots.
+        A snapshot's recorded schema is passed to the reader, so opening
+        runs no schema-inference job; a manifest without one is inferred.
+        Commits that wrote no rows have no part dirs and are skipped."""
+        dfs = []
+        for s in snaps:
+            d = self.data / s["data_dir"]
+            if not (d.exists() and any(d.glob(f"{PART_COL}=*"))):
+                continue
+            reader = spark.read.option("basePath", str(d))
+            if "schema" in s:
+                reader = reader.schema(StructType.fromJson(s["schema"]))
+            dfs.append(reader.parquet(str(d)))
+        if not dfs:
+            return None
+        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                      dfs)
 
     def read_snapshot(self, spark: SparkSession, snapshot_id: int) -> DataFrame | None:
         """Read exactly one snapshot's data files (None if the commit wrote
         no rows)."""
         for s in self.snapshots():
             if s["snapshot_id"] == snapshot_id:
-                d = self.data / s["data_dir"]
-                if d.exists() and any(d.glob(f"{PART_COL}=*")):
-                    return spark.read.option("basePath", str(d)).parquet(str(d))
-                return None
+                return self._open(spark, [s])
         raise KeyError(f"snapshot {snapshot_id} not found in {self.dir}")
 
     def _view(self, as_of: int | None = None) -> list[dict]:
@@ -205,18 +240,9 @@ class IceLite:
         rewritten when the pipeline grows its output schema, and an
         `as_of` read of a pre-evolution view still returns exactly the
         schema that view committed."""
-        # each snapshot dir is its own partitioned dataset (part=k subdirs);
-        # empty commits (no surviving docs) have no data files and are skipped
-        dfs = []
-        for s in self._view(as_of):
-            d = self.data / s["data_dir"]
-            if d.exists() and any(d.glob(f"{PART_COL}=*")):
-                dfs.append(spark.read.option("basePath", str(d)).parquet(str(d)))
-        if not dfs:
+        out = self._open(spark, self._view(as_of))
+        if out is None:
             raise FileNotFoundError(f"no data files in committed snapshots of {self.dir}")
-        out = dfs[0]
-        for other in dfs[1:]:
-            out = out.unionByName(other, allowMissingColumns=True)
         return out
 
     def read_spans(self, spark: SparkSession,
@@ -274,18 +300,13 @@ class IceLite:
             "run_id": run_id,
             "committed_at": time.time(),
             "data_dir": rel,
+            "schema": out.schema.jsonValue(),
             "replaces_through": prev,
             "compacted_snapshots": [s["snapshot_id"] for s in view],
             "partitions": dict(sorted(merged.items(), key=lambda kv: int(kv[0]))),
             **({"cluster_by": cluster_by} if cluster_by else {}),
         }
-        tmp = self.meta / f".v{sid}.json.{uuid.uuid4().hex}.tmp"
-        tmp.write_text(json.dumps(manifest, indent=2))
-        os.replace(tmp, self.meta / f"v{sid}.json")
-        tmp_cur = self.meta / f".CURRENT.{uuid.uuid4().hex}.tmp"
-        tmp_cur.write_text(str(sid))
-        os.replace(tmp_cur, self.meta / "CURRENT")
-        return manifest
+        return self._commit(manifest)
 
     def expire_snapshots(self) -> list[int]:
         """Iceberg `expire_snapshots`: delete the data files of snapshots
@@ -293,7 +314,6 @@ class IceLite:
         compaction).  Manifests are kept, marked `expired`, so lineage
         history survives; time travel into expired views raises.  Returns
         the expired snapshot ids."""
-        import shutil
         live = {s["snapshot_id"] for s in self._view()}
         expired = []
         for s in self.snapshots():
@@ -303,9 +323,7 @@ class IceLite:
             if d.exists():
                 shutil.rmtree(d)
             s["expired"] = True
-            tmp = self.meta / f".v{s['snapshot_id']}.json.{uuid.uuid4().hex}.tmp"
-            tmp.write_text(json.dumps(s, indent=2))
-            os.replace(tmp, self.meta / f"v{s['snapshot_id']}.json")
+            self._write_manifest(s)
             expired.append(s["snapshot_id"])
         return expired
 
@@ -314,7 +332,6 @@ class IceLite:
         manifest references — the leftovers of a crash between data write
         and manifest commit (invisible to readers by the commit protocol,
         but they hold disk).  Returns the removed directory names."""
-        import shutil
         referenced = {s["data_dir"] for s in self.snapshots()}
         removed = []
         for d in sorted(self.data.glob("snap-*")):

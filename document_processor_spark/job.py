@@ -7,7 +7,11 @@ Target lifecycle (SURVEY.md §3.5)::
 
 Each commit batch processes a set of doc_id-bucket partitions and writes one
 IceLite snapshot carrying per-partition lineage + metrics (docs in/out,
-spans out, OCR fallback pages/docs — BASELINE.json:6).  On restart the job
+spans out, OCR fallback pages/docs — BASELINE.json:6).  The metrics cost
+no pass of their own per commit: the output counters ride the snapshot
+write as one Observation, the input counts (docs in, empty payloads) come
+from one grouped aggregate per job, and IceLite.append puts both into the
+commit's one manifest write.  On restart the job
 consults committed snapshots and skips finished partitions (checkpoint
 resume, FIXTURES.md §5); re-runs are idempotent because a partition is only
 ever committed once and readers see only committed manifests.
@@ -15,9 +19,10 @@ ever committed once and readers see only committed manifests.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import pipeline
@@ -37,38 +42,61 @@ class JobSummary:
         return sum(len(c["partitions"]) for c in self.commits)
 
 
-def _partition_metrics(input_batch: DataFrame, written: DataFrame) -> dict[int, dict]:
-    """Per-partition lineage row fields (FIXTURES.md §5).
+# The per-partition output counters, each a SQL aggregate over the snapshot
+# rows restricted to one partition: `rows` says whether the partition wrote
+# any row at all, the rest are its lineage fields.
+_OUT_TERMS = {
+    "rows": "count_if({p})",
+    "docs_out": "count_if({p} AND size(spans) > 0)",
+    "spans_out": "coalesce(sum(CASE WHEN {p} THEN size(spans) END), 0)",
+    "fallback_pages": "coalesce(sum(CASE WHEN {p} THEN fallback_pages END), 0)",
+    "pages_in": "coalesce(sum(CASE WHEN {p} THEN pages_in END), 0)",
+    "fallback_docs": "count_if({p} AND fallback_pages > 0)",
+}
 
-    Input side: one agg over just (part, size(spans)) — column pruning keeps
-    the scan narrow.  Output side: one agg over the snapshot files just
-    written (orders of magnitude smaller than the input at corpus scale).
-    The extraction itself runs exactly once; no cache, no second parse."""
-    in_rows = (input_batch.groupBy(PART_COL).agg(
-        F.count(F.lit(1)).alias("docs_in"),
-        F.sum(F.when(F.size("spans") <= 0, 1).otherwise(0)).alias("empty_docs"),
-    ).collect())
-    out_rows = (written.groupBy(PART_COL).agg(
-        F.sum(F.when(F.size("spans") > 0, 1).otherwise(0)).alias("docs_out"),
-        F.sum(F.size("spans")).alias("spans_out"),
-        F.sum("fallback_pages").alias("fallback_pages"),
-        F.sum("pages_in").alias("pages_in"),
-        F.sum(F.when(F.col("fallback_pages") > 0, 1).otherwise(0)).alias("fallback_docs"),
-    ).collect())
+
+def _observe_lineage(rows: DataFrame, inputs: dict[int, dict], batch: list[int]
+                     ) -> tuple[DataFrame, Callable[[], dict[int, dict]]]:
+    """`rows` with one Observation carrying every output counter of every
+    partition in `batch`, and the resolver of the batch's lineage for
+    IceLite.append.  The Observation is valued by the snapshot write
+    itself: the counters sit in the write's result stage, where Spark
+    applies each task's update exactly once, so no second pass over the
+    written files is needed."""
+    obs = Observation()
+    terms = [F.expr(t.format(p=f"{PART_COL} = {p}")).alias(f"{k}_{p}")
+             for p in batch for k, t in _OUT_TERMS.items()]
+    return rows.observe(obs, *terms), lambda: _lineage(inputs, obs.get, batch)
+
+
+def _input_counts(docs: DataFrame, parts: list[int]) -> dict[int, dict]:
+    """docs_in / empty_docs per partition: one grouped aggregate over just
+    (part, size(spans)), for all the partitions a job commits.  Not an
+    Observation on the scan: a retried map stage re-applies its
+    accumulator updates."""
+    rows = (docs.filter(F.col(PART_COL).isin(parts)).groupBy(PART_COL)
+            .agg(F.expr("count(1)").alias("docs_in"),
+                 F.expr("count_if(size(spans) <= 0)").alias("empty_docs"))
+            .collect())
+    return {r[PART_COL]: {"docs_in": r["docs_in"], "empty_docs": r["empty_docs"]}
+            for r in rows}
+
+
+def _lineage(inputs: dict[int, dict], out: dict, batch: list[int]) -> dict[int, dict]:
+    """Per-partition lineage row fields.  Output fields appear only for a
+    partition that wrote rows; a partition with no input rows records {}."""
     m: dict[int, dict] = {}
-    for r in in_rows:
-        m.setdefault(r[PART_COL], {}).update(docs_in=r["docs_in"], empty_docs=r["empty_docs"])
-    for r in out_rows:
-        d = m.setdefault(r[PART_COL], {})
-        d.update(docs_out=r["docs_out"] or 0, spans_out=r["spans_out"] or 0,
-                 fallback_pages=r["fallback_pages"] or 0, pages_in=r["pages_in"] or 0,
-                 fallback_docs=r["fallback_docs"] or 0)
-    for d in m.values():
-        d["skipped_docs"] = d.get("docs_in", 0) - d.get("docs_out", 0)
-        # S29 reason codes (reference: 400-empty vs unprocessable,
-        # app/api.py:86-98,137-139): every quarantined doc is attributed
-        d["reason_empty_payload"] = d.get("empty_docs", 0)
-        d["reason_no_content"] = d["skipped_docs"] - d["reason_empty_payload"]
+    for p in batch:
+        d = dict(inputs.get(p, {}))
+        if out[f"rows_{p}"]:
+            d.update({k: out[f"{k}_{p}"] for k in _OUT_TERMS if k != "rows"})
+        if d:
+            d["skipped_docs"] = d.get("docs_in", 0) - d.get("docs_out", 0)
+            # S29 reason codes (reference: 400-empty vs unprocessable,
+            # app/api.py:86-98,137-139): every quarantined doc is attributed
+            d["reason_empty_payload"] = d.get("empty_docs", 0)
+            d["reason_no_content"] = d["skipped_docs"] - d["reason_empty_payload"]
+        m[p] = d
     return m
 
 
@@ -130,25 +158,23 @@ def run_extraction_job(spark: SparkSession, docs: DataFrame, warehouse: str,
     if max_commits is not None:
         batches = batches[:max_commits]
 
+    inputs = (_input_counts(docs, [p for b in batches for p in b])
+              if collect_metrics else {})
     for batch in batches:
         input_batch = docs.filter(F.col(PART_COL).isin(batch))
         # doc-level lineage (fallback_pages, pages_in) is stored in the
-        # table, quarantine rows included; per-partition metrics then come
-        # from the written snapshot, so the extraction runs exactly once
-        # per batch
+        # table, quarantine rows included; the extraction runs exactly once
+        # per batch and its write values the output counters
         result = snapshot_rows(pipeline.extract_detailed(
             input_batch, engine, first_page=first_page, last_page=last_page,
             ocr_pipeline=ocr_pipeline), n_parts)
-        manifest = table.append(result, run_id, partitions=batch,
+        metrics = None
+        if collect_metrics:
+            result, metrics = _observe_lineage(result, inputs, batch)
+        manifest = table.append(result, run_id, metrics=metrics,
+                                partitions=batch,
                                 extra={"engine": engine, "n_parts": n_parts},
                                 cluster_by=list(cluster_by or ()))
-        if collect_metrics:
-            written = table.read_snapshot(spark, manifest["snapshot_id"])
-            metrics = _partition_metrics(input_batch, written) if written is not None else {}
-            for p in batch:
-                metrics.setdefault(p, {})
-            table.update_metrics(manifest["snapshot_id"], metrics)
-            manifest["partitions"] = {str(p): metrics.get(p, {}) for p in sorted(batch)}
         summary.commits.append(manifest)
     return summary
 

@@ -58,8 +58,10 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # Put those 25 first, then any query whose code changes in r5/r6
 # (tools/check_stale_certs.py enumerates them mechanically), then
 # backfill the remaining ~25 slots re-certifying the oldest green rows
-# (the r01/r02 ext_* and mm_media_* families).  That lands every one of
-# the 172 queries with a driver row on current code by end of r6.
+# (the r01/r02 ext_* and mm_media_* families).  That lands 171 of the
+# 172 queries with an all-green driver row on current code by end of r6,
+# plus 1 rows-only by design: pipe_extract_synth_source has no comparable
+# oracle, so its driver row checks rows only.
 # ROUND-6 WINDOW (this tuple): the optimization round touched shared
 # helpers under a large fraction of the surface (scan fan-out, the fused
 # cleaning pass, the single-parse SQL-string expression builders, the

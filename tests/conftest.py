@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from document_processor_spark import fixtures, oracle
@@ -8,6 +10,10 @@ from document_processor_spark import fixtures, oracle
 @pytest.fixture(scope="session")
 def spark():
     from document_processor_spark.session import build_spark
+    # A fixed driver heap.  Under the 48g default, G1 may grow this JVM
+    # past 12 GB, and on a 16 GB host the cluster test_submit starts
+    # beside it then gets the test JVM killed for memory.
+    os.environ.setdefault("SPARK_DRIVER_MEM", "8g")
     s = build_spark(app="dps-tests", cores=8, shuffle_partitions=8)
     yield s
     s.stop()

@@ -85,6 +85,8 @@ def test_additive_schema_evolution(spark, table):
         .selectExpr("cast(id as string) as doc_id", "id as v",
                     "concat('en-', id) as lang"), 4)
     table.append(df, run_id="evolved", partitions=[0, 1, 2, 3])
+    # each snapshot opens from the schema its manifest records
+    assert all("schema" in s for s in table.snapshots())
 
     cur = table.read(spark)
     assert "lang" in cur.columns
@@ -97,3 +99,8 @@ def test_additive_schema_evolution(spark, table):
     before = table.read(spark, as_of=3)
     assert "lang" not in before.columns
     assert before.count() == 30
+    # and reads the schemas inference gives
+    for as_of, df in ((None, cur), (3, before)):
+        view = [{k: v for k, v in s.items() if k != "schema"}
+                for s in table._view(as_of)]
+        assert df.schema == table._open(spark, view).schema
