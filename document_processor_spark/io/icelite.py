@@ -73,12 +73,17 @@ class IceLite:
             return 0
         return int(cur.read_text().strip())
 
+    def _manifest(self, snapshot_id: int) -> dict | None:
+        p = self.meta / f"v{snapshot_id}.json"
+        return json.loads(p.read_text()) if p.exists() else None
+
     def snapshots(self) -> list[dict]:
+        """Every committed manifest, oldest first (expired ones included)."""
         out = []
         for i in range(1, self.current_snapshot_id() + 1):
-            p = self.meta / f"v{i}.json"
-            if p.exists():
-                out.append(json.loads(p.read_text()))
+            m = self._manifest(i)
+            if m is not None:
+                out.append(m)
         return out
 
     def committed_partitions(self) -> set[int]:
@@ -211,17 +216,23 @@ class IceLite:
         `as_of` (default: current).  A compaction snapshot carries
         `replaces_through`: it REPLACES every snapshot ≤ that id, so the
         view is the latest such snapshot ≤ as_of plus all later appends —
-        exactly Iceberg's rewrite-then-append lineage."""
-        snaps = self.snapshots()
+        exactly Iceberg's rewrite-then-append lineage.  Manifests are read
+        newest first down to that snapshot, so opening a table reads as
+        many manifests as its view holds, however long its history."""
+        top = self.current_snapshot_id()
         if as_of is not None:
-            snaps = [s for s in snaps if s["snapshot_id"] <= as_of]
-        if not snaps:
-            raise FileNotFoundError(f"no committed snapshots in {self.dir}")
-        base = 0
-        for s in snaps:
+            top = min(top, as_of)
+        view: list[dict] = []
+        for i in range(top, 0, -1):
+            s = self._manifest(i)
+            if s is None:
+                continue
+            view.append(s)
             if s.get("replaces_through"):
-                base = s["snapshot_id"]
-        view = [s for s in snaps if s["snapshot_id"] >= base]
+                break
+        if not view:
+            raise FileNotFoundError(f"no committed snapshots in {self.dir}")
+        view.reverse()
         expired = [s["snapshot_id"] for s in view if s.get("expired")]
         if expired:
             raise FileNotFoundError(

@@ -104,3 +104,29 @@ def test_additive_schema_evolution(spark, table):
         view = [{k: v for k, v in s.items() if k != "schema"}
                 for s in table._view(as_of)]
         assert df.schema == table._open(spark, view).schema
+
+
+def test_current_open_reads_only_the_view_manifests(spark, tmp_path,
+                                                    monkeypatch):
+    """Opening the table reads the manifests of its view only, not every
+    manifest ever committed: after 30 appends, a compaction and 2 more
+    appends, a current read opens 3 manifests, however long the history."""
+    t = IceLite(tmp_path, "long")
+    df = with_part(spark.range(2).selectExpr(
+        "cast(id as string) as doc_id", "id as v"), 2)
+    for i in range(30):
+        t.append(df, run_id=f"r{i}", partitions=[0, 1])
+    t.compact(spark, run_id="compact")
+    t.expire_snapshots()
+    for i in range(2):
+        t.append(df, run_id=f"s{i}", partitions=[0, 1])
+
+    read = []
+    manifest = IceLite._manifest
+    monkeypatch.setattr(IceLite, "_manifest",
+                        lambda self, i: read.append(i) or manifest(self, i))
+    assert len(_rows(t.read_spans(spark))) == 64
+    assert sorted(read) == [31, 32, 33]
+    read.clear()
+    assert len(t.snapshots()) == 33  # full history is still there
+    assert len(read) == 33

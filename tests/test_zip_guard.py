@@ -1,0 +1,144 @@
+"""The Arrow engine's worker-side zip guard: `importlib.invalidate_caches()`,
+which PySpark's worker calls at the start of every task, re-reads a
+`zipimporter`'s archive directory only when the archive changed.  Reads are
+counted by wrapping `zipimport._read_directory`, never by timing."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+from document_processor_spark import fixtures, pipeline
+
+REPO = Path(__file__).resolve().parents[1]
+
+# Runs in its own interpreter so this process's zipimporter stays stock.
+_PROBE = r"""
+import importlib, importlib.machinery, json, os, sys, zipfile, zipimport
+
+arc = os.path.join(sys.argv[1], "mods.zip")
+reads = []
+stock_read = zipimport._read_directory
+
+
+def counted(path):
+    reads.append(path)
+    return stock_read(path)
+
+
+zipimport._read_directory = counted
+
+
+def write(*names):
+    with zipfile.ZipFile(arc, "w") as z:  # in place: same inode
+        for n in names:
+            z.writestr(f"{n}.py", f"NAME = {n!r}\n")
+
+
+def n_reads(*steps):
+    reads.clear()
+    for step in steps:
+        step()
+    return sum(r == arc for r in reads)
+
+
+def lookup(name):
+    return lambda: importlib.machinery.PathFinder.find_spec(name)
+
+
+write("zg_a")
+sys.path.insert(0, arc)
+import zg_a
+
+out = {"stock": n_reads(importlib.invalidate_caches, lookup("zg_a"))}
+from document_processor_spark.pipeline import _guard_zip_rereads
+_guard_zip_rereads()
+_guard_zip_rereads()  # a second install is a no-op
+out["unchanged"] = n_reads(importlib.invalidate_caches, lookup("zg_a"))
+write("zg_a", "zg_b")
+out["rewritten"] = n_reads(importlib.invalidate_caches, lookup("zg_b"))
+import zg_b
+out["new_member"] = zg_b.NAME
+out["after_rewrite"] = n_reads(importlib.invalidate_caches, lookup("zg_b"))
+os.remove(arc)
+importlib.invalidate_caches()
+out["deleted_finds"] = importlib.machinery.PathFinder.find_spec("zg_a") is not None
+print(json.dumps(out))
+"""
+
+
+def test_guard_rereads_only_changed_archives(tmp_path):
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        [str(REPO), *filter(None, [env.get("PYTHONPATH")])])
+    res = subprocess.run([sys.executable, "-c", _PROBE, str(tmp_path)],
+                         env=env, capture_output=True, text=True, timeout=120)
+    assert res.returncode == 0, res.stderr
+    out = json.loads(res.stdout.strip().splitlines()[-1])
+    assert out == {
+        "stock": 1,            # the counter sees the stock re-read
+        "unchanged": 0,
+        "rewritten": 1,        # re-read once ...
+        "new_member": "zg_b",  # ... and the new member imports
+        "after_rewrite": 0,
+        "deleted_finds": False,  # no exception, archive dropped as stock
+    }
+
+
+def test_arrow_worker_rereads_no_unchanged_archive(spark):
+    """In a Python worker that has run the Arrow kernel, a task start's
+    `importlib.invalidate_caches()` reads no archive directory, while the
+    stock method re-reads every zipimporter's archive in that process."""
+    rows = pipeline.explode_spans(fixtures.corpus_df(
+        spark, 0.001, include_skew=False)).repartition(4)
+
+    def probe(batches):
+        import importlib
+        import os
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        from document_processor_spark import pipeline as P
+
+        parsed = sum(b.num_rows for b in P._arrow_worker(batches))
+        importers = [i for i in sys.path_importer_cache.values()
+                     if isinstance(i, zipimport.zipimporter)]
+        reads = []
+        stock_read = zipimport._read_directory
+
+        def counted(path):
+            reads.append(path)
+            return stock_read(path)
+
+        def n_reads(invalidate):
+            reads.clear()
+            invalidate()
+            for imp in importers:  # a lookup, for lazy (3.13) re-reads
+                imp.find_spec("no_such_module_zg")
+            return len(reads)
+
+        stock = zipimport.zipimporter.invalidate_caches.__wrapped__
+        zipimport._read_directory = counted
+        try:
+            guarded = n_reads(importlib.invalidate_caches)
+            unguarded = n_reads(lambda: [stock(i) for i in importers])
+        finally:
+            zipimport._read_directory = stock_read
+        yield pa.RecordBatch.from_pydict({
+            "pid": [os.getpid()], "parsed": [parsed],
+            "importers": [len(importers)], "guarded": [guarded],
+            "unguarded": [unguarded]})
+
+    out = rows.mapInArrow(
+        probe, "pid long, parsed long, importers long, guarded long, "
+               "unguarded long").collect()
+    assert sum(r["parsed"] for r in out) == rows.count() > 0
+    for r in out:
+        assert r["importers"] > 0, r
+        assert r["unguarded"] == r["importers"], r
+        assert r["guarded"] == 0, r
