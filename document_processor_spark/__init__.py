@@ -15,7 +15,9 @@ fixtures.py    deterministic synthetic corpus generator (seed=42, FIXTURES.md)
 oracle.py      pure-Python reference implementation (the correctness anchor)
 pipeline.py    the end-to-end Spark extraction pipeline (2 engines: native
                Catalyst expressions, and pyarrow mapInArrow)
-functions/     column-level building blocks (cleaning, classify, html, ...)
+functions/     Catalyst SQL builders of the contract rules (clean, classify,
+               html density, table flatten), shared by parse_sql and the
+               extraction operators; cross-engine hash columns
 operators/     dataflow + training-data operators (dedup, ann, text analysis)
 io/            Iceberg-semantics table layer (snapshots, lineage, resume)
 session.py     SparkSession factory tuned for the workload

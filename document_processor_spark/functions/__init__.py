@@ -1,1 +1,2 @@
-"""Column-level building blocks (native Catalyst expressions)."""
+"""Catalyst expression builders: the extraction contract's rules as SQL
+strings (cleaning) and the cross-engine hash columns (hashing)."""

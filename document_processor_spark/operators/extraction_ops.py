@@ -4,7 +4,9 @@ generic `documents` table (doc_id, text, lang, source, n_chars).
 Each query exercises one operator family from SURVEY.md §2 with an exact
 DuckDB oracle.  The *full* pipeline semantics (fallback, page assembly) are
 proven against the pure-Python oracle in pytest; these queries additionally
-prove Spark↔ANSI-SQL parity of every column-level building block.
+prove Spark↔ANSI-SQL parity of the contract's rules.  The glyph-clean,
+classify, table-flatten and html-density queries build from the same
+`functions.cleaning` SQL builders that `pipeline.parse_sql` runs.
 
 Determinism notes: all float outputs are derived with identical operation
 order in both engines (or integer/decimal math), so value hashes match
@@ -28,9 +30,9 @@ _GLYPH_INJECT_SUFFIX = " \tglyph<c=3,font=/AB1+Foo-Bar>x"
 
 def q_glyph_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
-    dirty = F.concat(F.lit(_GLYPH_INJECT_PREFIX), F.col("text"),
-                     F.lit(_GLYPH_INJECT_SUFFIX))
-    return d.select("doc_id", X.clean_text_col(dirty).alias("cleaned_text"))
+    dirty = (f"concat({X.sql_lit(_GLYPH_INJECT_PREFIX)}, text, "
+             f"{X.sql_lit(_GLYPH_INJECT_SUFFIX)})")
+    return d.selectExpr("doc_id", f"{X.clean_text(dirty)} AS cleaned_text")
 
 
 SQL_GLYPH_CLEAN = f"""
@@ -101,8 +103,9 @@ def q_kind_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks = d.select(
         "doc_id",
         F.explode(F.array(head, body)).alias("block_text"))
-    kind = X.classify_textual_col(F.col("block_text"))
-    return blocks.select("doc_id", "block_text", kind.alias("kind"))
+    return blocks.selectExpr(
+        "doc_id", "block_text",
+        f"{X.classify_textual('block_text')} AS kind")
 
 
 SQL_KIND_CLASSIFY = """
@@ -125,12 +128,11 @@ def q_table_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Construct a 2-row cell grid from each doc's text, then apply the
     canonical flattening (split rows/cells, glyph-clean each cell, re-join)."""
     d = read_table(spark, sf_dir, "documents")
-    grid = F.concat(
-        F.lit("colA\tcolB\n"),
-        F.regexp_replace(F.array_join(F.slice(F.split("text", " ", -1), 1, 4), " "),
-                         " ", "\t"),
-        F.lit("\tglyph<77> tail  cell"))
-    return d.select("doc_id", X.flatten_table_col(grid).alias("table_text"))
+    head, tab = X.sql_lit("colA\tcolB\n"), X.sql_lit("\t")
+    tail = X.sql_lit("\tglyph<77> tail  cell")
+    grid = (f"concat({head}, regexp_replace(array_join(slice("
+            f"split(text, ' ', -1), 1, 4), ' '), ' ', {tab}), {tail})")
+    return d.selectExpr("doc_id", f"{X.flatten_table(grid)} AS table_text")
 
 
 SQL_TABLE_FLATTEN = r"""
@@ -275,15 +277,15 @@ def q_html_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wrap each doc's head in synthetic markup, then strip + density-score:
     the DOM-heuristic boilerplate filter on a checkable derivation."""
     d = read_table(spark, sf_dir, "documents")
-    markup = F.concat(F.lit('<div class="c"><p>'),
-                      F.substring("text", 1, 80),
-                      F.lit('</p><a href="/x">m</a></div>'))
-    stripped = X.clean_text_col(X.strip_tags_col(markup))
-    dens = X.html_density_col(markup, stripped)
-    return d.select(
-        "doc_id", stripped.alias("main_text"),
-        F.round(dens, 4).alias("density"),
-        (dens >= C.HTML_DENSITY_THRESHOLD).alias("is_main_content"))
+    head = X.sql_lit('<div class="c"><p>')
+    tail = X.sql_lit('</p><a href="/x">m</a></div>')
+    markup = f"concat({head}, substring(text, 1, 80), {tail})"
+    stripped = X.clean_text(X.strip_tags(markup))
+    dens = X.html_density(f"length({markup})", stripped)
+    return d.selectExpr(
+        "doc_id", f"{stripped} AS main_text",
+        f"round({dens}, 4) AS density",
+        f"{X.is_main_content(dens)} AS is_main_content")
 
 
 SQL_HTML_DENSITY = rf"""

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from . import contract as C
+from .functions import cleaning as X
 
 # The parsed schema is NARROW by design: one (kind, text, media_ref) per
 # span plus a `scan_only` flag, NOT parallel fast_*/full_* column pairs.
@@ -138,35 +139,6 @@ def _arrow_partitions(df: DataFrame) -> int:
     return _parse_partitions(df, _ARROW_WAVE_FACTOR)
 
 
-# ---------------------------------------------------------------------------
-# r6: single-parse SQL-string construction.
-#
-# Measured (OPTIMIZATION_r06.md): assembling the parse + assembly
-# expressions Column-op-by-Column-op cost 0.36-0.49 s of DRIVER time per
-# extract run — hundreds of py4j round trips — versus ~1.2 s of cluster
-# execution.  The same trees written as SQL strings parse JVM-side in one
-# call per select.  Every template below is a literal transcription of the
-# Column form it replaces (same operators, same branch order, same
-# duplicated subtrees), so the analyzed plan and the results are
-# unchanged; equality is pinned by the oracle suite and the e2e tests.
-# ---------------------------------------------------------------------------
-
-def _sql_lit(s: str) -> str:
-    """SQL string literal: escape backslashes/quotes for the parser's
-    unescape pass; control characters are embedded raw (the lexer accepts
-    them inside quotes)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-_WS_LIT = _sql_lit(C.JAVA_WS)
-
-
-def _cat_clean(x: str) -> str:
-    """SQL twin of functions.cleaning.clean_text_col."""
-    return (f"btrim(regexp_replace(coalesce({x}, ''), "
-            f"{_sql_lit(C.GLYPH_RUN_PATTERN)}, ' '), {_WS_LIT})")
-
-
 def _clustered_by_doc(rows: DataFrame) -> bool:
     """True when the input's physical plan is already hash-partitioned on a
     subset of {doc_id, page} with at least core-count parallelism.  Then
@@ -239,102 +211,80 @@ def explode_spans(docs: DataFrame, first_page: int = 1,
 # ---------------------------------------------------------------------------
 
 def parse_sql(rows: DataFrame) -> DataFrame:
-    """Per-span extraction as pure Catalyst expressions, two stages:
+    """Per-span extraction as pure Catalyst expressions, in two stages:
 
     shuffle first: explicit repartition on (doc_id, page) over the raw
     exploded rows.  This is the shuffle the page aggregation needs anyway,
     and doing it BEFORE the heavy expressions is the skew treatment: a
     1000-page document (or several hashed into one input partition) spreads
     across the whole cluster before any regex runs — the pre-shuffle work is
-    just explode + shuffle write of raw text.
+    just explode + shuffle write of raw text.  When the input already
+    arrives hash-partitioned on doc_id (see _clustered_by_doc) the
+    repartition is skipped and the whole extract plan is exchange-free.
 
-    stage A (post-shuffle): one lazy CASE per heavy derivation — each
-    kind's regex battery appears exactly once, so common-subexpression
-    elimination cannot hoist another kind's work onto a row.
+    stage A projects each span's derivation (the cleaned, decoded,
+    tag-stripped or flattened string) as ONE `CASE raw_kind` column, next
+    to the cheap side values the gates need (raw html length, heading tag).
+    Each kind's regex battery appears once in the plan.
 
-    stage B: cheap classification over the stage-A strings; the page agg
-    then runs without a second exchange (the (doc_id, page) partitioning
-    is preserved through both projections).
-
-    r6: when the input already arrives hash-partitioned on doc_id (see
-    _clustered_by_doc) the repartition is skipped and the entire extract
-    plan becomes exchange-free — 2 Exchange → 0.
+    stage B reads only projected columns: the gates (non-empty, html
+    density, table blank) turn the derivation into the span's text or
+    null, then the kind is classified from that text.  Gates and
+    classification each read a projected column more than once, which is
+    what keeps CollapseProject from inlining a copy of the derivation
+    (the reason the gates are CASE tests, not nullif: Spark inlines
+    nullif's argument into its branches).  The (doc_id, page)
+    partitioning survives both projections, so the page agg runs without
+    another exchange.
     """
     if not _clustered_by_doc(rows):
         rows = rows.repartition(_parse_partitions(rows), "doc_id", "page")
 
-    # ---- stage A: heavy derivations, one lazy CASE occurrence each --------
-    # (single-parse SQL strings — transcription of the former Column code;
-    # subtree duplication mirrors the Column form, which also expanded each
-    # reused Column object into a copy of its tree)
-    t_clean = _cat_clean("raw_text")
-    s_dec = (f"CASE WHEN raw_text RLIKE {_sql_lit(C.SCAN_PAYLOAD_PATTERN)} "
-             f"THEN try_validate_utf8(CAST(unbase64(substr(raw_text, "
-             f"{len(C.SCAN_PREFIX) + 1}, length(raw_text))) AS STRING)) "
-             f"ELSE NULL END")
-    s_clean = (f"CASE WHEN ({s_dec}) IS NOT NULL "
-               f"THEN {_cat_clean(f'({s_dec})')} END")
-    h_raw = "coalesce(raw_text, '')"
-    h_clean = _cat_clean(
-        f"regexp_replace({h_raw}, {_sql_lit(C.HTML_TAG_PATTERN)}, ' ')")
-    density = (f"CASE WHEN length({h_raw}) > 0 "
-               f"THEN CAST(length({h_clean}) AS DOUBLE)"
-               f" / CAST(length({h_raw}) AS DOUBLE) ELSE 0.0D END")
-    h_keep = (f"CASE WHEN (({h_clean}) != '') AND (({density}) >= "
-              f"{C.HTML_DENSITY_THRESHOLD!r}D) THEN {h_clean} END")
-    tb_flat = (f"array_join(transform(split(coalesce(raw_text, ''), '\\n', -1), "
-               f"row -> array_join(transform(split(row, '\\t', -1), "
-               f"cell -> {_cat_clean('cell')}), '\\t')), '\\n')")
-    tb_blank = f"(btrim(coalesce({tb_flat}, ''), {_WS_LIT}) = '')"
-    tb_keep = f"CASE WHEN NOT {tb_blank} THEN {tb_flat} END"
-    m_alt = f"CASE WHEN raw_text IS NOT NULL THEN {_cat_clean('raw_text')} END"
-    m_keep = f"CASE WHEN ({m_alt}) != '' THEN {m_alt} END"
+    def raw_is(*kinds: str) -> str:
+        return f"raw_kind IN ({', '.join(map(X.sql_lit, kinds))})"
 
-    cleaned = (
-        f"CASE WHEN raw_kind = '{C.RAW_PDF_TEXT}' "
-        f"THEN CASE WHEN ({t_clean}) != '' THEN {t_clean} END "
-        f"WHEN raw_kind = '{C.RAW_PDF_SCAN}' "
-        f"THEN CASE WHEN ({s_clean}) != '' THEN {s_clean} END "
-        f"WHEN raw_kind = '{C.RAW_HTML}' THEN {h_keep} "
-        f"WHEN raw_kind = '{C.RAW_TABLE}' THEN {tb_keep} "
-        f"WHEN raw_kind = '{C.RAW_MEDIA}' THEN {m_keep} END")
-    h_head = (f"CASE WHEN raw_kind = '{C.RAW_HTML}' "
-              f"THEN {h_raw} RLIKE {_sql_lit(C.HTML_HEADING_PATTERN)} END")
-
+    # pdf_text and media alt text share one clean: a null text cleans to
+    # '' (dropped text; a media span without alt text) either way
+    derived = (
+        f"CASE WHEN {raw_is(C.RAW_PDF_TEXT, C.RAW_MEDIA)} "
+        f"THEN {X.clean_text('raw_text')} "
+        f"WHEN {raw_is(C.RAW_PDF_SCAN)} "
+        f"THEN {X.clean_text(X.decode_scan('raw_text'))} "
+        f"WHEN {raw_is(C.RAW_HTML)} "
+        f"THEN {X.clean_text(X.strip_tags('raw_text'))} "
+        f"WHEN {raw_is(C.RAW_TABLE)} THEN {X.flatten_table('raw_text')} END")
     stage_a = rows.selectExpr(
         "doc_id", "page", "block", "raw_kind", "raw_media_ref",
-        f"{cleaned} AS cleaned", f"{h_head} AS h_head")
+        f"{derived} AS derived",
+        f"CASE WHEN {raw_is(C.RAW_HTML)} THEN length(raw_text) END AS h_len",
+        f"CASE WHEN {raw_is(C.RAW_HTML)} "
+        f"THEN {X.html_is_heading('raw_text')} END AS h_head")
 
-    # ---- stage B: cheap classification on the stage-A strings --------------
     # One (kind, text) per span + scan_only (see PARSED_DDL): the fast
     # pipeline's result is derived downstream as "non-scan_only rows" (T4),
     # never materialized as a second column set.
-    marks = " OR ".join(f"startswith(cleaned, {_sql_lit(m)})"
-                        for m in C.HEADING_MARKERS)
-    textual = (f"CASE WHEN ({marks}) "
-               f"THEN '{C.KIND_HEADING}' ELSE '{C.KIND_PARAGRAPH}' END")
-    html_kind = (f"CASE WHEN h_head THEN '{C.KIND_HEADING}' "
-                 f"ELSE '{C.KIND_PARAGRAPH}' END")
-    kind_out = (
-        f"CASE WHEN raw_kind = '{C.RAW_PDF_TEXT}' "
-        f"THEN CASE WHEN cleaned IS NOT NULL THEN {textual} END "
-        f"WHEN raw_kind = '{C.RAW_PDF_SCAN}' "
-        f"THEN CASE WHEN cleaned IS NOT NULL THEN {textual} END "
-        f"WHEN raw_kind = '{C.RAW_HTML}' "
-        f"THEN CASE WHEN cleaned IS NOT NULL THEN {html_kind} END "
-        f"WHEN raw_kind = '{C.RAW_TABLE}' "
-        f"THEN CASE WHEN cleaned IS NOT NULL THEN '{C.KIND_TABLE}' END "
-        f"WHEN raw_kind = '{C.RAW_MEDIA}' "
-        f"THEN CASE WHEN cleaned IS NOT NULL THEN '{C.KIND_FIGURE}' "
-        f"ELSE '{C.KIND_MEDIA_REF}' END END")
-
-    return stage_a.selectExpr(
-        "doc_id", "page", "block",
-        f"{kind_out} AS kind",
-        "CASE WHEN cleaned IS NOT NULL THEN cleaned END AS text",
-        f"CASE WHEN raw_kind = '{C.RAW_MEDIA}' THEN raw_media_ref END"
+    keep = (
+        f"CASE WHEN {raw_is(C.RAW_HTML)} THEN derived != '' AND "
+        f"{X.is_main_content(X.html_density('h_len', 'derived'))} "
+        f"WHEN {raw_is(C.RAW_TABLE)} THEN NOT {X.is_blank('derived')} "
+        f"ELSE derived != '' END")
+    gated = stage_a.selectExpr(
+        "doc_id", "page", "block", "raw_kind", "raw_media_ref", "h_head",
+        f"CASE WHEN {keep} THEN derived END AS text")
+    kind = (
+        f"CASE WHEN text IS NULL THEN CASE WHEN {raw_is(C.RAW_MEDIA)} "
+        f"THEN {X.sql_lit(C.KIND_MEDIA_REF)} END "
+        f"WHEN {raw_is(C.RAW_HTML)} THEN CASE WHEN h_head "
+        f"THEN {X.sql_lit(C.KIND_HEADING)} "
+        f"ELSE {X.sql_lit(C.KIND_PARAGRAPH)} END "
+        f"WHEN {raw_is(C.RAW_TABLE)} THEN {X.sql_lit(C.KIND_TABLE)} "
+        f"WHEN {raw_is(C.RAW_MEDIA)} THEN {X.sql_lit(C.KIND_FIGURE)} "
+        f"ELSE {X.classify_textual('text')} END")
+    return gated.selectExpr(
+        "doc_id", "page", "block", f"{kind} AS kind", "text",
+        f"CASE WHEN {raw_is(C.RAW_MEDIA)} THEN raw_media_ref END"
         " AS media_ref",
-        f"coalesce(raw_kind = '{C.RAW_PDF_SCAN}', false) AS scan_only")
+        f"coalesce({raw_is(C.RAW_PDF_SCAN)}, false) AS scan_only")
 
 
 # ---------------------------------------------------------------------------
@@ -377,9 +327,8 @@ def _kernel_clean(pc, arr):
     """contract.clean_text over an Arrow string array (T3).  RE2 and Python
     `re` agree on these patterns for the ASCII-whitespace corpora the
     contract covers (contract.py:30-36 documents the same tolerance for the
-    Java regex engine).  r6: same single-pass fusion as the Catalyst
-    engine (C.GLYPH_RUN_PATTERN proof) — one RE2 rebuild plus a set-based
-    trim instead of three rebuilds."""
+    Java regex engine).  Same single pass as the Catalyst engine
+    (C.GLYPH_RUN_PATTERN proof): one RE2 rebuild plus a set-based trim."""
     from . import contract as Ct
     a = pc.replace_substring_regex(arr, pattern=Ct.GLYPH_RUN_PATTERN,
                                    replacement=" ")
@@ -592,17 +541,16 @@ def assemble(parsed: DataFrame, with_layout: bool = False,
     Single-converter modes have no chain, so fallback_pages is 0."""
     if ocr_pipeline not in ("hybrid", "fast", "full"):
         raise ValueError(f"unknown ocr_pipeline: {ocr_pipeline!r}")
-    # single-parse SQL strings (r6) — transcription of the former Column
-    # aggregation; the named_struct field order, the tiebreak concat and
-    # both comparators are byte-for-byte the same expressions
-    tie = (f"crc32(encode(concat_ws({_sql_lit(chr(0x1f))}, kind, "
-           f"coalesce(text, {_sql_lit(_TIE_NULL)}), "
-           f"coalesce(media_ref, {_sql_lit(_TIE_NULL)})), 'UTF-8'))")
+    # expressions are SQL strings: the JVM parses each select in one call
+    # instead of one py4j round trip per Column node
+    tie =(f"crc32(encode(concat_ws({X.sql_lit(chr(0x1f))}, kind, "
+           f"coalesce(text, {X.sql_lit(_TIE_NULL)}), "
+           f"coalesce(media_ref, {X.sql_lit(_TIE_NULL)})), 'UTF-8'))")
     span_s = (f"CASE WHEN kind IS NOT NULL THEN named_struct("
               f"'block', block, 'pg', page, 'tb', {tie}, 'kind', kind, "
               f"'text', text, 'media_ref', media_ref, "
               f"'scan_only', scan_only) END")
-    kinds_in = ", ".join(_sql_lit(k) for k in C.TEXT_KINDS)
+    kinds_in = ", ".join(X.sql_lit(k) for k in C.TEXT_KINDS)
 
     page_level = (parsed.groupBy("doc_id", "page").agg(
         F.expr(f"collect_list({span_s})").alias("arr"),
@@ -644,42 +592,30 @@ def assemble(parsed: DataFrame, with_layout: bool = False,
         "fallback_pages", "pages_in",
     )
 
+    fields = ("'kind', x.kind, 'text', x.text, 'media_ref', x.media_ref, "
+              "'offset', CAST(i AS INT)")
     if with_layout:
         # S21/S22: synthetic-layout Position struct + page dimensions —
         # deterministic functions of (page, block), contract.position_for
-        def mk(x, i):
-            portrait = x["pg"] % 2 == 0
-            width = F.when(portrait, F.lit(C.PAGE_W_PORTRAIT)) \
-                     .otherwise(F.lit(C.PAGE_H_PORTRAIT))
-            height = F.when(portrait, F.lit(C.PAGE_H_PORTRAIT)) \
-                      .otherwise(F.lit(C.PAGE_W_PORTRAIT))
-            top = F.round(F.lit(C.MARGIN_PT)
-                          + F.pmod(x["block"], F.lit(C.LINES_PER_PAGE))
-                          * F.lit(C.LINE_H_PT), 2)
-            return F.struct(
-                x["kind"].alias("kind"),
-                x["text"].alias("text"),
-                x["media_ref"].alias("media_ref"),
-                i.cast("int").alias("offset"),
-                F.struct(
-                    (x["pg"] + 1).cast("int").alias("page_num"),
-                    top.alias("top"),
-                    F.round(width - F.lit(C.MARGIN_PT), 2).alias("right"),
-                    F.round(top + F.lit(C.LINE_H_PT - C.LINE_GAP_PT), 2)
-                     .alias("bottom"),
-                    F.lit(C.MARGIN_PT).alias("left"),
-                    F.lit(C.COORD_ORIGIN).alias("coord_origin"),
-                ).alias("position"),
-                width.alias("page_width"),
-                height.alias("page_height"))
-        spans = F.transform(F.col("flat"), mk)
-        return doc_level.select(
-            "doc_id", spans.alias("spans"), "fallback_pages", "pages_in")
+        def dbl(v: float) -> str:
+            return f"{v!r}D"
+        portrait = "x.pg % 2 = 0"
+        width = (f"CASE WHEN {portrait} THEN {dbl(C.PAGE_W_PORTRAIT)} "
+                 f"ELSE {dbl(C.PAGE_H_PORTRAIT)} END")
+        height = (f"CASE WHEN {portrait} THEN {dbl(C.PAGE_H_PORTRAIT)} "
+                  f"ELSE {dbl(C.PAGE_W_PORTRAIT)} END")
+        top = (f"round({dbl(C.MARGIN_PT)} + pmod(x.block, {C.LINES_PER_PAGE})"
+               f" * {dbl(C.LINE_H_PT)}, 2)")
+        fields += (
+            f", 'position', named_struct("
+            f"'page_num', CAST(x.pg + 1 AS INT), 'top', {top}, "
+            f"'right', round({width} - {dbl(C.MARGIN_PT)}, 2), "
+            f"'bottom', round({top} + {dbl(C.LINE_H_PT - C.LINE_GAP_PT)}, 2), "
+            f"'left', {dbl(C.MARGIN_PT)}, "
+            f"'coord_origin', {X.sql_lit(C.COORD_ORIGIN)}), "
+            f"'page_width', {width}, 'page_height', {height}")
     return doc_level.selectExpr(
-        "doc_id",
-        "transform(flat, (x, i) -> named_struct('kind', x.kind, "
-        "'text', x.text, 'media_ref', x.media_ref, "
-        "'offset', CAST(i AS INT))) AS spans",
+        "doc_id", f"transform(flat, (x, i) -> named_struct({fields})) AS spans",
         "fallback_pages", "pages_in")
 
 

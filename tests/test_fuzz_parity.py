@@ -26,10 +26,15 @@ _PIECES = [
     "scan:" + base64.b64encode(" glyph<9> ".encode()).decode(),
 ]
 _KINDS = ["pdf_text", "pdf_scan", "html", "table_raw", "media", "junk_kind"]
+# in this seed's docs every raw kind can draw a null text and the raw kind
+# itself can be null; the other seeds give a null text to media only
+NULL_SEED = 4
 
 
 def _random_docs(seed: int, n_docs: int = 60) -> list[dict]:
     rng = random.Random(seed)
+    nulls = seed == NULL_SEED
+    kinds = _KINDS + [None] if nulls else _KINDS
     docs = []
     for i in range(n_docs):
         n = rng.randint(0, 12)
@@ -40,8 +45,8 @@ def _random_docs(seed: int, n_docs: int = 60) -> list[dict]:
             offsets[0] = offsets[-1]  # force at least one duplicate slot
         spans = []
         for off in offsets:
-            kind = rng.choice(_KINDS)
-            text = rng.choice([None] + _PIECES) if kind == "media" \
+            kind = rng.choice(kinds)
+            text = rng.choice([None] + _PIECES) if kind == "media" or nulls \
                 else rng.choice(_PIECES)
             mref = f"m-{rng.getrandbits(16):04x}" if kind == "media" else None
             spans.append({"kind": kind, "text": text,
@@ -51,7 +56,7 @@ def _random_docs(seed: int, n_docs: int = 60) -> list[dict]:
     return docs
 
 
-@pytest.mark.parametrize("seed", [1, 2, 3])
+@pytest.mark.parametrize("seed", [1, 2, 3, NULL_SEED])
 @pytest.mark.parametrize("engine", ["sql", "arrow"])
 def test_fuzz_spark_equals_oracle(spark, seed, engine):
     docs = _random_docs(seed)

@@ -7,6 +7,7 @@ claims:
 * the fused glyph+whitespace cleaning pass == the literal 3-step contract
   (Python-level fuzz over the adversarial token alphabet, plus Spark-level
   equality on real corpus text);
+* the sql parse plan holds each raw kind's derivation once;
 * the single-parse SQL-string shingle/minhash/cosine expressions == their
   former Column forms (kept inline here as the reference);
 * read_table keeps the local fan-out for single-split fixtures and skips
@@ -106,7 +107,7 @@ def test_clean_text_col_matches_contract_on_corpus(spark):
     texts = (docs.select(F.explode("spans").alias("s"))
              .select(F.col("s.text").alias("t"))
              .filter(F.col("t").isNotNull()))
-    got = texts.select("t", X.clean_text_col(F.col("t")).alias("c")).collect()
+    got = texts.selectExpr("t", f"{X.clean_text('t')} AS c").collect()
     for r in got:
         assert r["c"] == C.clean_text(r["t"])
 
@@ -116,10 +117,24 @@ def test_is_blank_col_matches_reference(spark):
     rows = [("",), (" \t\n",), ("\x0b\f\r",), ("a",), (" a ",), (None,),
             ("\t x",)]
     df = spark.createDataFrame(rows, "s string")
-    got = df.select("s", X.is_blank_col(F.col("s")).alias("b")).collect()
+    got = df.selectExpr("s", f"{X.is_blank('s')} AS b").collect()
     for r in got:
         ref = re.sub(r"\s", "", r["s"] or "") == ""
         assert r["b"] == ref, r
+
+
+# -- one derivation per span in the parse plan --------------------------------
+
+def test_parse_plan_derives_each_kind_once(spark):
+    """Each raw kind's derivation is one subtree of the executed parse plan:
+    one RegExpReplace per clean/strip site (pdf_text and media alt text
+    share one clean; scan clean; html strip and clean; table cell clean),
+    one UnBase64 for the scan decode, one RLike per match (scan grammar,
+    html heading tag)."""
+    docs = fixtures.corpus_df(spark, 0.001, n_partitions=4)
+    parsed = pipeline.parse_sql(pipeline.explode_spans(docs))
+    assert [_count_exprs(parsed, n)
+            for n in ("RegExpReplace", "UnBase64", "RLike")] == [5, 1, 2]
 
 
 # -- single-parse SQL strings == former Column forms --------------------------
