@@ -47,13 +47,15 @@ def run_curation_job(spark: SparkSession, docs: DataFrame, warehouse: str,
                      run_id: str, n_parts: int = 32) -> CurationSummary:
     """Run the corpus-build funnel over `docs` ((doc_id, source, text) at
     minimum) and commit ONE snapshot of (doc_id, source, tokens, seq)
-    rows.  Idempotent on run_id: a completed run is never re-committed."""
+    rows.  Idempotent on run_id: the table state maps each committed
+    run id to its snapshot (one manifest read), so a completed run is
+    never re-committed, and a run that crashed before its commit reruns."""
     table = IceLite(warehouse, CURATED_TABLE)
-    for s in table.snapshots():
-        if s.get("curation_run_id") == run_id:
-            return CurationSummary(run_id=run_id, skipped=True,
-                                   snapshot_id=s["snapshot_id"],
-                                   funnel=s.get("funnel", {}))
+    done = table.committed_run(run_id)
+    if done is not None:
+        return CurationSummary(run_id=run_id, skipped=True,
+                               snapshot_id=done["snapshot_id"],
+                               funnel=done.get("funnel", {}))
 
     result, obs = corpus_build(docs, with_observations=True)
     result = with_part(result, n_parts)

@@ -52,13 +52,14 @@ def run_cluster_job(spark: SparkSession, docs: DataFrame, pairs: DataFrame,
     """Resolve the near-dup `pairs` graph (columns d1, d2) over `docs`
     (column doc_id) into canonical clusters and commit ONE snapshot of
     (doc_id, cluster_id, n_members) with the CC telemetry in the
-    manifest.  Idempotent on run_id."""
+    manifest.  Idempotent on run_id, as run_curation_job: the table
+    state names the snapshot of each committed run id."""
     table = IceLite(warehouse, CLUSTERS_TABLE)
-    for s in table.snapshots():
-        if s.get("dedup_run_id") == run_id:
-            return ClusterSummary(run_id=run_id, skipped=True,
-                                  snapshot_id=s["snapshot_id"],
-                                  cc=s.get("cc", {}))
+    done = table.committed_run(run_id)
+    if done is not None:
+        return ClusterSummary(run_id=run_id, skipped=True,
+                              snapshot_id=done["snapshot_id"],
+                              cc=done.get("cc", {}))
 
     cc: dict = {}
     labels = connected_components(pairs, max_iters=max_iters, algo=algo,

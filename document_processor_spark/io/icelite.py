@@ -9,15 +9,20 @@ snapshot-isolated reads — behind an interface a real cluster swaps for
 Layout::
 
     <root>/<table>/
-        data/snap-<id>/part=<k>/*.parquet     immutable data files per commit
-        meta/v<id>.json                        snapshot manifest
-        meta/CURRENT                           pointer to latest snapshot id
+        data/snap-<id>-<attempt>/part=<k>/*.parquet   one dir per write attempt
+        meta/v<id>.json                               snapshot manifest
+        meta/CURRENT                                  id of the committed head
 
-Commit protocol (single-writer, crash-safe): data files are fully written
-BEFORE the manifest; the manifest is written to a temp file and atomically
-renamed; CURRENT is updated last.  A crash mid-write leaves orphan data files
-that no manifest references — invisible to readers, exactly Iceberg's model.
-Readers list data directories from manifests only, never by globbing.
+Invariants (Iceberg's model, https://iceberg.apache.org/spec/):
+
+* A commit (one writer at a time) writes its data dir, then its
+  manifest, then CURRENT, each by atomic rename.  The CURRENT swap is the commit: manifests above CURRENT
+  are not committed, and readers list data dirs from the manifests of
+  their view only, never by globbing.
+* Each write attempt writes a data dir of its own, named in its
+  manifest's ``data_dir``.  A writer that dies before CURRENT moves
+  leaves only files no committed manifest names: the next commit needs
+  no manual step, and ``remove_orphans`` reclaims them.
 
 A commit writes its manifest once, complete:
 
@@ -28,8 +33,12 @@ A commit writes its manifest once, complete:
 * ``partitions`` — per-partition lineage and metrics.  ``append`` accepts
   them as a callable, resolved after the data write and before the
   manifest rename, so counters an Observation collects during the write
-  itself land in the same manifest: a committed snapshot never waits for a
-  second pass to get its lineage.
+  itself land in the same manifest.
+* ``state`` — what the table has committed through this snapshot, folded
+  from the parent's by ``fold_state``: the partition spec (``n_parts``),
+  the done partitions, each once-per-run writer's run id, and each
+  stream run's last batch id.  Writers ask ``IceLite.state()``, one
+  manifest read at any table age, instead of scanning history.
 """
 
 from __future__ import annotations
@@ -54,6 +63,23 @@ def with_part(df: DataFrame, n_parts: int, key: str = "doc_id") -> DataFrame:
     """Stateless bucketing of documents into n_parts partitions (the fixture
     analog of Iceberg's bucket(doc_id) transform, FIXTURES.md §1)."""
     return df.withColumn(PART_COL, F.pmod(F.xxhash64(F.col(key)), F.lit(n_parts)).cast("int"))
+
+
+# Manifest keys naming the run of a once-per-run writer (curation, dedup).
+RUN_KEYS = ("curation_run_id", "dedup_run_id")
+
+
+def fold_state(state: dict, m: dict) -> dict:
+    """The table state after committing manifest `m` on a table in `state`:
+    the one rule for what a table has committed."""
+    runs = {**state["runs"], **{m[k]: m["snapshot_id"] for k in RUN_KEYS if k in m}}
+    batches = dict(state["stream_batches"])
+    if "stream_run_id" in m:
+        r = m["stream_run_id"]
+        batches[r] = max(batches.get(r, -1), m["streaming_batch_id"])
+    return {"n_parts": m.get("n_parts", state["n_parts"]),
+            "done": sorted(set(state["done"]) | {int(p) for p in m["partitions"]}),
+            "runs": runs, "stream_batches": batches}
 
 
 class IceLite:
@@ -86,18 +112,53 @@ class IceLite:
                 out.append(m)
         return out
 
+    def state(self, n_parts: int | None = None) -> dict:
+        """The committed table state (see `fold_state`): the head manifest's
+        `state`.  Manifests written without one are folded onto the newest
+        `state` below them (or onto the empty table), newest read first.
+        With `n_parts`, also checks it is the table's partition spec:
+        committed partition ids mean nothing under another bucketing."""
+        unfolded = []
+        base = {"n_parts": None, "done": [], "runs": {}, "stream_batches": {}}
+        for i in range(self.current_snapshot_id(), 0, -1):
+            m = self._manifest(i)
+            if m is None:
+                continue
+            if "state" in m:
+                base = m["state"]
+                break
+            unfolded.append(m)
+        state = reduce(fold_state, reversed(unfolded), base)
+        if n_parts is not None and state["n_parts"] not in (None, n_parts):
+            raise ValueError(
+                f"table {self.dir} is bucketed with n_parts={state['n_parts']}; "
+                f"cannot commit or resume with n_parts={n_parts}")
+        return state
+
     def committed_partitions(self) -> set[int]:
-        done: set[int] = set()
-        for s in self.snapshots():
-            done.update(int(k) for k in s["partitions"])
-        return done
+        return set(self.state()["done"])
+
+    def committed_run(self, run_id: str) -> dict | None:
+        """The manifest a once-per-run writer committed for `run_id`, if any."""
+        sid = self.state()["runs"].get(run_id)
+        return None if sid is None else self._manifest(sid)
 
     # -- write path -----------------------------------------------------------
 
-    def _commit(self, manifest: dict) -> dict:
-        """Land one snapshot's manifest (tmp file + atomic rename), then
-        advance CURRENT to it the same way."""
+    def _write_data(self, df: DataFrame, sid: int) -> str:
+        """Write `df` partitioned by PART_COL into a data dir of this
+        attempt's own; returns its name under data/."""
+        rel = f"snap-{sid:06d}-{uuid.uuid4().hex[:8]}"
+        df.write.mode("errorifexists").partitionBy(PART_COL).parquet(
+            str(self.data / rel))
+        return rel
+
+    def _commit(self, manifest: dict, parent_state: dict) -> dict:
+        """Land one snapshot's manifest, its `state` folded from the
+        parent's (tmp file + atomic rename), then advance CURRENT to it
+        the same way."""
         sid = manifest["snapshot_id"]
+        manifest["state"] = fold_state(parent_state, manifest)
         self._write_manifest(manifest)
         tmp_cur = self.meta / f".CURRENT.{uuid.uuid4().hex}.tmp"
         tmp_cur.write_text(str(sid))
@@ -128,6 +189,10 @@ class IceLite:
         before the manifest is written, so values an Observation on `df`
         collects during the write go into this commit's manifest.
 
+        `extra` fields land in the manifest; an `n_parts` there must match
+        the table's partition spec, else ValueError before any data is
+        written.
+
         `cluster_by` sorts rows WITHIN each write task before the parquet
         encoder sees them (Iceberg's write.sort-order analog): row groups
         then carry tight non-overlapping min/max stats on those columns,
@@ -135,21 +200,18 @@ class IceLite:
         partition — at 10^12 rows the difference between a doc_id lookup
         touching kilobytes and touching a whole bucket.  Sort is per-task
         (no extra shuffle, no global order claim)."""
+        extra = {**(extra or {})}
+        state = self.state(extra.get("n_parts"))
         sid = self.current_snapshot_id() + 1
-        rel = f"snap-{sid:06d}"
-        out_dir = self.data / rel
         if cluster_by:
             # PART_COL leads the sort: FileFormatWriter requires per-task
             # ordering on the partition columns and would otherwise insert
             # its OWN (unstable) sort on PART_COL alone, destroying the
             # cluster order; with the prefix satisfied it adds nothing.
             df = df.sortWithinPartitions(PART_COL, *cluster_by)
-        (df.write.mode("errorifexists")
-           .partitionBy(PART_COL)
-           .parquet(str(out_dir)))
+        rel = self._write_data(df, sid)
         if callable(metrics):
             metrics = metrics()
-        extra = {**(extra or {})}
         if cluster_by:
             # Recorded in the manifest (Iceberg's write.sort-order lives in
             # table metadata) so compact() can re-apply it: a rewrite that
@@ -159,7 +221,7 @@ class IceLite:
             parts = sorted(partitions)
         else:
             parts = sorted(int(p.name.split("=")[1])
-                           for p in out_dir.glob(f"{PART_COL}=*"))
+                           for p in (self.data / rel).glob(f"{PART_COL}=*"))
         manifest = {
             "snapshot_id": sid,
             "parent_id": sid - 1 if sid > 1 else None,
@@ -168,9 +230,9 @@ class IceLite:
             "data_dir": rel,
             "schema": df.schema.jsonValue(),
             "partitions": {str(p): (metrics or {}).get(p, {}) for p in parts},
-            **(extra or {}),
+            **extra,
         }
-        return self._commit(manifest)
+        return self._commit(manifest, state)
 
     def update_metrics(self, snapshot_id: int, metrics: dict[int, dict]) -> None:
         """Replace per-partition metrics on an already-committed manifest
@@ -206,10 +268,11 @@ class IceLite:
     def read_snapshot(self, spark: SparkSession, snapshot_id: int) -> DataFrame | None:
         """Read exactly one snapshot's data files (None if the commit wrote
         no rows)."""
-        for s in self.snapshots():
-            if s["snapshot_id"] == snapshot_id:
-                return self._open(spark, [s])
-        raise KeyError(f"snapshot {snapshot_id} not found in {self.dir}")
+        committed = snapshot_id <= self.current_snapshot_id()
+        s = self._manifest(snapshot_id) if committed else None
+        if s is None:
+            raise KeyError(f"snapshot {snapshot_id} not found in {self.dir}")
+        return self._open(spark, [s])
 
     def _view(self, as_of: int | None = None) -> list[dict]:
         """The snapshots whose data files constitute the table view at
@@ -281,18 +344,15 @@ class IceLite:
         is logically identical to the current view and supersedes every
         prior snapshot (`replaces_through`).  Readers of older as_of
         views are unaffected until expire_snapshots() reclaims them.
-        Per-partition lineage/metrics carry over (latest value wins), so
-        checkpoint resume still skips every committed partition after the
-        replaced manifests are expired."""
+        The done partitions carry over in `state`, so checkpoint resume
+        still skips every committed partition after the replaced manifests
+        are expired.  The rewrite declares no partition of its own and
+        records no metrics: lineage stays with the commits that did the
+        work, so summing it over `lineage()` counts each document once."""
         view = self._view()
-        merged: dict[str, dict] = {}
-        for s in self.snapshots():  # full history: resume-safety superset
-            for p, m in s["partitions"].items():
-                merged[p] = m or merged.get(p, {})
+        state = self.state()
         prev = self.current_snapshot_id()
         df = self.read(spark)
-        sid = prev + 1
-        rel = f"snap-{sid:06d}"
         # Iceberg's rewrite_data_files honors the table sort order: re-apply
         # the latest recorded cluster order so compaction doesn't destroy the
         # row-group min/max pruning that append(cluster_by=...) established.
@@ -303,8 +363,8 @@ class IceLite:
         out = df.repartition(PART_COL)
         if cluster_by:
             out = out.sortWithinPartitions(PART_COL, *cluster_by)
-        (out.write.mode("errorifexists").partitionBy(PART_COL)
-            .parquet(str(self.data / rel)))
+        sid = prev + 1
+        rel = self._write_data(out, sid)
         manifest = {
             "snapshot_id": sid,
             "parent_id": prev if prev else None,
@@ -314,10 +374,10 @@ class IceLite:
             "schema": out.schema.jsonValue(),
             "replaces_through": prev,
             "compacted_snapshots": [s["snapshot_id"] for s in view],
-            "partitions": dict(sorted(merged.items(), key=lambda kv: int(kv[0]))),
+            "partitions": {},
             **({"cluster_by": cluster_by} if cluster_by else {}),
         }
-        return self._commit(manifest)
+        return self._commit(manifest, state)
 
     def expire_snapshots(self) -> list[int]:
         """Iceberg `expire_snapshots`: delete the data files of snapshots
@@ -339,16 +399,22 @@ class IceLite:
         return expired
 
     def remove_orphans(self) -> list[str]:
-        """Iceberg `remove_orphan_files`: delete data directories no
-        manifest references — the leftovers of a crash between data write
-        and manifest commit (invisible to readers by the commit protocol,
-        but they hold disk).  Returns the removed directory names."""
+        """Iceberg `remove_orphan_files`: delete the data directories no
+        committed manifest references, then the manifests above CURRENT —
+        the leftovers of a commit that crashed before CURRENT moved
+        (invisible to readers by the commit protocol, but they hold
+        disk).  Returns the removed names."""
         referenced = {s["data_dir"] for s in self.snapshots()}
         removed = []
         for d in sorted(self.data.glob("snap-*")):
             if d.name not in referenced:
                 shutil.rmtree(d)
                 removed.append(d.name)
+        top = self.current_snapshot_id()
+        for p in sorted(self.meta.glob("v*.json")):
+            if int(p.stem[1:]) > top:
+                p.unlink()
+                removed.append(p.name)
         return removed
 
     def lineage(self) -> list[dict]:

@@ -11,10 +11,11 @@ spans out, OCR fallback pages/docs — BASELINE.json:6).  The metrics cost
 no pass of their own per commit: the output counters ride the snapshot
 write as one Observation, the input counts (docs in, empty payloads) come
 from one grouped aggregate per job, and IceLite.append puts both into the
-commit's one manifest write.  On restart the job
-consults committed snapshots and skips finished partitions (checkpoint
-resume, FIXTURES.md §5); re-runs are idempotent because a partition is only
-ever committed once and readers see only committed manifests.
+commit's one manifest write.  Idempotency: IceLite.state (one manifest
+read) names the done partitions and the bucket count.  A run skips the
+done partitions (checkpoint resume, FIXTURES.md §5) and refuses another
+n_parts, whose partition ids would name other documents.  A batch whose
+commit crashed before CURRENT moved is not done, and the next run redoes it.
 """
 
 from __future__ import annotations
@@ -137,17 +138,8 @@ def run_extraction_job(spark: SparkSession, docs: DataFrame, warehouse: str,
     OcrPipeline request param, api.py:69 — see pipeline.assemble)."""
     pipeline.check_engine(engine)
     table = IceLite(warehouse, SPANS_TABLE)
-    # resume safety: committed partition ids are only meaningful under the
-    # SAME bucketing — resuming with a different n_parts would skip wrong
-    # buckets (silently dropping or duplicating documents)
-    for s in table.snapshots():
-        if "n_parts" in s and s["n_parts"] != n_parts:
-            raise ValueError(
-                f"warehouse {warehouse} was written with n_parts="
-                f"{s['n_parts']} (snapshot {s['snapshot_id']}); "
-                f"cannot resume with n_parts={n_parts}")
+    done = set(table.state(n_parts)["done"])
     docs = with_part(docs, n_parts)
-    done = table.committed_partitions()
     todo = [p for p in range(n_parts) if p not in done]
     summary = JobSummary(run_id=run_id, skipped_partitions=sorted(done))
 
@@ -181,7 +173,5 @@ def run_extraction_job(spark: SparkSession, docs: DataFrame, warehouse: str,
 
 def read_spans(spark: SparkSession, warehouse: str,
                include_skipped: bool = False) -> DataFrame:
-    df = IceLite(warehouse, SPANS_TABLE).read(spark)
-    if not include_skipped:
-        df = df.filter(F.size("spans") > 0)
-    return df
+    table = IceLite(warehouse, SPANS_TABLE)
+    return table.read(spark) if include_skipped else table.read_spans(spark)

@@ -36,14 +36,15 @@ def make_batch_processor(table: IceLite, run_id: str, engine: str,
     a crash between our snapshot commit and that checkpoint commit replays
     the micro-batch with the same batch_id.  table.append always allocates
     a fresh snapshot, so an unguarded replay would double-commit the same
-    documents.  The guard scans committed manifests for this run's
-    streaming_batch_id and skips the append — making the
-    snapshot-commit/checkpoint-commit pair effectively exactly-once."""
+    documents.  The table state records this run's last committed batch
+    id (one manifest read), and a batch at or below it is skipped — making
+    the snapshot-commit/checkpoint-commit pair effectively exactly-once.
+    A batch whose commit crashed before CURRENT moved is not recorded, so
+    its replay commits it.  A batch with another n_parts than the table's
+    raises before writing anything."""
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        for s in table.snapshots():
-            if (s.get("stream_run_id") == run_id
-                    and s.get("streaming_batch_id") == batch_id):
-                return  # replayed batch: snapshot already committed
+        if batch_id <= table.state()["stream_batches"].get(run_id, -1):
+            return  # replayed batch: snapshot already committed
         result = snapshot_rows(
             pipeline.extract_detailed(batch_df, engine), n_parts)
         table.append(result, run_id=f"{run_id}-b{batch_id}",

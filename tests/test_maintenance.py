@@ -53,11 +53,14 @@ def test_append_after_compact(spark, table):
 def test_expire_snapshots(spark, table):
     before = _rows(table.read(spark))
     table.compact(spark, run_id="compact-1")
+    dirs = [table.data / s["data_dir"] for s in table.snapshots()[:3]]
+    assert all(d.exists() for d in dirs)
     expired = table.expire_snapshots()
     assert expired == [1, 2, 3]
     # current view unaffected; expired data dirs gone, manifests kept
     assert _rows(table.read(spark)) == before
-    assert not any((table.data / f"snap-{i:06d}").exists() for i in expired)
+    assert [table.data / table._manifest(i)["data_dir"] for i in expired] == dirs
+    assert not any(d.exists() for d in dirs)
     assert len(table.lineage()) >= 12  # history survives in manifests
     with pytest.raises(FileNotFoundError, match="expired"):
         table.read(spark, as_of=2)
