@@ -21,6 +21,12 @@ functions/     Catalyst SQL builders of the contract rules (clean, classify,
 operators/     dataflow + training-data operators (dedup, ann, text analysis)
 io/            Iceberg-semantics table layer (snapshots, lineage, resume)
 session.py     SparkSession factory tuned for the workload
+zip_guard.py   per-task zip archive re-read guard, installed at import so
+               every Python worker that runs a package function has it
 """
 
+from .zip_guard import guard_zip_rereads
+
 __version__ = "0.1.0"
+
+guard_zip_rereads()

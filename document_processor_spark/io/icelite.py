@@ -9,7 +9,7 @@ snapshot-isolated reads — behind an interface a real cluster swaps for
 Layout::
 
     <root>/<table>/
-        data/snap-<id>-<attempt>/part=<k>/*.parquet   one dir per write attempt
+        data/snap=<id>-<attempt>/part=<k>/*.parquet   one dir per write attempt
         meta/v<id>.json                               snapshot manifest
         meta/CURRENT                                  id of the committed head
 
@@ -23,13 +23,19 @@ Invariants (Iceberg's model, https://iceberg.apache.org/spec/):
   manifest's ``data_dir``.  A writer that dies before CURRENT moves
   leaves only files no committed manifest names: the next commit needs
   no manual step, and ``remove_orphans`` reclaims them.
+* A view is one scan over the dirs its manifests name: ``data/`` is the
+  scan's base path, so ``snap`` is a partition level beside ``part``.
+  ``snap`` exists at read time only, to let one scan span several write
+  attempts: ``_open`` drops it, so it never reaches the output.  ``part``
+  stays a partition column, so filters on it prune directories.
 
 A commit writes its manifest once, complete:
 
 * ``schema`` — the written frame's schema (``part`` included), Iceberg's
-  per-snapshot schema in table metadata.  Readers open each snapshot dir
-  with it, so opening a table runs no schema-inference job; a manifest
-  without it is opened by inference.
+  per-snapshot schema in table metadata.  Readers open a view with the
+  merge of its snapshots' schemas, so opening a table runs no
+  schema-inference job; a view with a manifest lacking it is opened by
+  inference.
 * ``partitions`` — per-partition lineage and metrics.  ``append`` accepts
   them as a callable, resolved after the data write and before the
   manifest rename, so counters an Observation collects during the write
@@ -54,9 +60,11 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 PART_COL = "part"
+# Partition level of data/ naming the write attempt (see the module docstring).
+SNAP_COL = "snap"
 
 
 def with_part(df: DataFrame, n_parts: int, key: str = "doc_id") -> DataFrame:
@@ -67,6 +75,24 @@ def with_part(df: DataFrame, n_parts: int, key: str = "doc_id") -> DataFrame:
 
 # Manifest keys naming the run of a once-per-run writer (curation, dedup).
 RUN_KEYS = ("curation_run_id", "dedup_run_id")
+
+
+def view_schema(schemas: list[dict]) -> StructType:
+    """The read schema of a view: its snapshots' recorded schemas merged by
+    name in snapshot order, then SNAP_COL and PART_COL.  A column a snapshot
+    lacks reads null in its files (Iceberg add-column); a column whose type
+    differs between snapshots is a ValueError."""
+    fields: dict[str, StructField] = {}
+    for js in schemas:
+        for f in StructType.fromJson(js).fields:
+            seen = fields.setdefault(f.name, f)
+            if seen.dataType.simpleString() != f.dataType.simpleString():
+                raise ValueError(
+                    f"column {f.name!r} is {seen.dataType.simpleString()} in "
+                    f"one snapshot and {f.dataType.simpleString()} in another")
+    part = fields.pop(PART_COL)
+    return StructType([*fields.values(), StructField(SNAP_COL, StringType()),
+                       part])
 
 
 def fold_state(state: dict, m: dict) -> dict:
@@ -148,7 +174,7 @@ class IceLite:
     def _write_data(self, df: DataFrame, sid: int) -> str:
         """Write `df` partitioned by PART_COL into a data dir of this
         attempt's own; returns its name under data/."""
-        rel = f"snap-{sid:06d}-{uuid.uuid4().hex[:8]}"
+        rel = f"{SNAP_COL}={sid:06d}-{uuid.uuid4().hex[:8]}"
         df.write.mode("errorifexists").partitionBy(PART_COL).parquet(
             str(self.data / rel))
         return rel
@@ -245,25 +271,33 @@ class IceLite:
     # -- read path ------------------------------------------------------------
 
     def _open(self, spark: SparkSession, snaps: list[dict]) -> DataFrame | None:
-        """One scan per snapshot dir, unioned by name (None if none of them
-        holds rows).  Each dir is its own partitioned dataset (part=k
-        subdirs): Spark refuses one read over several partition roots.
-        A snapshot's recorded schema is passed to the reader, so opening
-        runs no schema-inference job; a manifest without one is inferred.
-        Commits that wrote no rows have no part dirs and are skipped."""
-        dfs = []
+        """The snapshots' data dirs as one scan (None if none of them holds
+        rows): one read with data/ as base path, so each dir is a SNAP_COL
+        partition, read as a string and dropped.  The read schema is
+        `view_schema` of the recorded schemas, so opening runs no
+        schema-inference job; if a manifest lacks one, the view is inferred
+        with mergeSchema.  Commits that wrote no rows have no part dirs and
+        are skipped."""
+        with_rows = []
         for s in snaps:
+            if not s["data_dir"].startswith(f"{SNAP_COL}="):
+                raise ValueError(
+                    f"data dir {s['data_dir']!r} of snapshot "
+                    f"{s['snapshot_id']} in {self.dir} is not a "
+                    f"{SNAP_COL}= partition of data/")
             d = self.data / s["data_dir"]
-            if not (d.exists() and any(d.glob(f"{PART_COL}=*"))):
-                continue
-            reader = spark.read.option("basePath", str(d))
-            if "schema" in s:
-                reader = reader.schema(StructType.fromJson(s["schema"]))
-            dfs.append(reader.parquet(str(d)))
-        if not dfs:
+            if d.exists() and any(d.glob(f"{PART_COL}=*")):
+                with_rows.append(s)
+        if not with_rows:
             return None
-        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                      dfs)
+        reader = spark.read.option("basePath", str(self.data))
+        if all("schema" in s for s in with_rows):
+            reader = reader.schema(
+                view_schema([s["schema"] for s in with_rows]))
+        else:
+            reader = reader.option("mergeSchema", "true")
+        return reader.parquet(*(str(self.data / s["data_dir"])
+                                for s in with_rows)).drop(SNAP_COL)
 
     def read_snapshot(self, spark: SparkSession, snapshot_id: int) -> DataFrame | None:
         """Read exactly one snapshot's data files (None if the commit wrote
@@ -309,8 +343,8 @@ class IceLite:
         committed manifests in the `as_of` view are scanned.
 
         Additive schema evolution (Iceberg add-column): a snapshot may
-        carry columns earlier snapshots lack — the union fills them with
-        null on the old side, so historical data files are never
+        carry columns earlier snapshots lack — the scan reads them as null
+        from the older files, so historical data files are never
         rewritten when the pipeline grows its output schema, and an
         `as_of` read of a pre-evolution view still returns exactly the
         schema that view committed."""
@@ -335,7 +369,7 @@ class IceLite:
     # long-running 10^12-row pipeline cannot live without: every
     # checkpoint commit adds a snapshot whose data dir holds
     # one-file-per-partition — after thousands of incremental commits the
-    # read path unions thousands of small datasets (the classic
+    # read path lists and scans thousands of small files (the classic
     # small-files problem) and the metadata grows without bound.
 
     def compact(self, spark: SparkSession, run_id: str) -> dict:
@@ -399,15 +433,15 @@ class IceLite:
         return expired
 
     def remove_orphans(self) -> list[str]:
-        """Iceberg `remove_orphan_files`: delete the data directories no
-        committed manifest references, then the manifests above CURRENT —
+        """Iceberg `remove_orphan_files`: delete every directory under data/
+        no committed manifest references, then the manifests above CURRENT —
         the leftovers of a commit that crashed before CURRENT moved
         (invisible to readers by the commit protocol, but they hold
         disk).  Returns the removed names."""
         referenced = {s["data_dir"] for s in self.snapshots()}
         removed = []
-        for d in sorted(self.data.glob("snap-*")):
-            if d.name not in referenced:
+        for d in sorted(self.data.iterdir()):
+            if d.is_dir() and d.name not in referenced:
                 shutil.rmtree(d)
                 removed.append(d.name)
         top = self.current_snapshot_id()

@@ -16,6 +16,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_mem(pretouch: bool = False) -> str:
+    """The driver heap: SPARK_DRIVER_MEM when set, else 48g (24g with
+    pretouch) capped at half of physical RAM, so a heap sized for a big
+    box cannot grow a JVM past what a small one has."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    cap_gb = 24 if pretouch else 48
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{cap_gb}g" if cap_gb * 1024 <= half_mb else f"{half_mb}m"
+
+
 def build_spark(app: str = "document-processor-spark",
                 cores: int | None = None,
                 shuffle_partitions: int | None = None,
@@ -38,6 +49,7 @@ def build_spark(app: str = "document-processor-spark",
     else:
         master = f"local[{cores}]"
     shuffle_partitions = shuffle_partitions or max(cores, 8)
+    heap = driver_mem(pretouch)
     b = (
         SparkSession.builder.master(master)
         .appName(app)
@@ -50,8 +62,7 @@ def build_spark(app: str = "document-processor-spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEM", "24g" if pretouch else "48g"))
+        .config("spark.driver.memory", heap)
         # codegen-heavy workload: janino classes accumulate per session and a
         # full JIT code cache silently disables compilation (10-30x slowdown).
         # pretouch: fault the whole fixed-size heap in at JVM start (untimed)
@@ -61,8 +72,7 @@ def build_spark(app: str = "document-processor-spark",
         # same flags via spark-submit --conf
         .config("spark.driver.extraJavaOptions",
                 "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing"
-                + (" -Xms" + os.environ.get("SPARK_DRIVER_MEM", "24g")
-                   + " -XX:+AlwaysPreTouch" if pretouch else ""))
+                + (f" -Xms{heap} -XX:+AlwaysPreTouch" if pretouch else ""))
         # shuffle spill dir on tmpfs: the sandbox VM's /tmp is virtio-disk
         # backed and becomes the scaling bottleneck once shuffle volume
         # exceeds the page cache (a real cluster uses local NVMe)

@@ -10,6 +10,7 @@ import glob
 import pyarrow.parquet as pq
 
 from document_processor_spark import fixtures
+from document_processor_spark.io.icelite import IceLite
 from document_processor_spark.job import run_extraction_job
 
 
@@ -66,7 +67,8 @@ def test_extraction_snapshot_files_are_doc_id_clustered(spark, tmp_path):
     docs = fixtures.corpus_df(spark, 0.001, include_skew=False,
                               n_partitions=8)
     run_extraction_job(spark, docs, wh, "clu", n_parts=4)
-    files = glob.glob(f"{wh}/spans/data/snap-*/part=*/*.parquet")
+    files = [f for s in IceLite(wh, "spans").snapshots()
+             for f in glob.glob(f"{wh}/spans/data/{s['data_dir']}/part=*/*.parquet")]
     assert files
     checked = 0
     for path in files:

@@ -81,7 +81,7 @@ def test_job_resumes_after_a_crashed_commit(spark, input_df, golden, tmp_path,
     assert len(s.commits) == 1 and len(s.skipped_partitions) == 2
     assert_oracle_table(spark, wh, expected)
     dead = unreferenced_dirs(table)
-    assert len(dead) == 1 and dead[0].startswith("snap-000002-")
+    assert len(dead) == 1 and dead[0].startswith("snap=000002-")
     assert table.remove_orphans() == dead
     assert unreferenced_dirs(table) == []
     assert_oracle_table(spark, wh, expected)
@@ -112,7 +112,7 @@ def test_replayed_batch_commits_after_a_crashed_commit(spark, input_df, golden,
     assert table.current_snapshot_id() == 2
     assert_oracle_table(spark, wh, expected)
     dead = unreferenced_dirs(table)
-    assert len(dead) == 1 and dead[0].startswith("snap-000002-")
+    assert len(dead) == 1 and dead[0].startswith("snap=000002-")
     assert table.remove_orphans() == dead
     assert_oracle_table(spark, wh, expected)
 

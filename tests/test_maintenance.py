@@ -79,6 +79,20 @@ def test_remove_orphans(spark, table):
     assert _rows(table.read(spark)) == before
 
 
+def test_remove_orphans_reclaims_every_unreferenced_dir(spark, table):
+    """A crashed attempt's dir in the `snap=` form is reclaimed along with
+    one of any other name; referenced dirs stay."""
+    orphans = ["snap-000099", "snap=000099-deadbeef"]
+    for name in orphans:
+        (table.data / name / f"{PART_COL}=0").mkdir(parents=True)
+        (table.data / name / f"{PART_COL}=0" / "x.parquet").write_bytes(b"junk")
+    before = _rows(table.read(spark))
+    assert table.remove_orphans() == orphans
+    assert sorted(d.name for d in table.data.iterdir()) == sorted(
+        s["data_dir"] for s in table.snapshots())
+    assert _rows(table.read(spark)) == before
+
+
 def test_additive_schema_evolution(spark, table):
     """Iceberg add-column evolution: a new snapshot with an extra column
     reads alongside the old ones (null-filled), historical files are never

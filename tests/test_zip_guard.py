@@ -1,4 +1,4 @@
-"""The Arrow engine's worker-side zip guard: `importlib.invalidate_caches()`,
+"""The package's worker-side zip guard: `importlib.invalidate_caches()`,
 which PySpark's worker calls at the start of every task, re-reads a
 `zipimporter`'s archive directory only when the archive changed.  Reads are
 counted by wrapping `zipimport._read_directory`, never by timing."""
@@ -12,6 +12,7 @@ import sys
 from pathlib import Path
 
 from document_processor_spark import fixtures, pipeline
+from document_processor_spark.operators import multimodal
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -54,9 +55,9 @@ sys.path.insert(0, arc)
 import zg_a
 
 out = {"stock": n_reads(importlib.invalidate_caches, lookup("zg_a"))}
-from document_processor_spark.pipeline import _guard_zip_rereads
-_guard_zip_rereads()
-_guard_zip_rereads()  # a second install is a no-op
+from document_processor_spark.zip_guard import guard_zip_rereads
+guard_zip_rereads()
+guard_zip_rereads()  # a second install is a no-op
 out["unchanged"] = n_reads(importlib.invalidate_caches, lookup("zg_a"))
 write("zg_a", "zg_b")
 out["rewritten"] = n_reads(importlib.invalidate_caches, lookup("zg_b"))
@@ -88,24 +89,20 @@ def test_guard_rereads_only_changed_archives(tmp_path):
     }
 
 
-def test_arrow_worker_rereads_no_unchanged_archive(spark):
-    """In a Python worker that has run the Arrow kernel, a task start's
-    `importlib.invalidate_caches()` reads no archive directory, while the
-    stock method re-reads every zipimporter's archive in that process."""
-    rows = pipeline.explode_spans(fixtures.corpus_df(
-        spark, 0.001, include_skew=False)).repartition(4)
-
+def _reread_probe(work, batch):
+    """A worker function that runs an operator's worker function `work` over
+    its input, then counts the archive directories a task start's
+    `importlib.invalidate_caches()` reads in that process, guarded and
+    stock; `batch` builds its one output batch from a dict of columns.
+    The probe imports nothing from the package itself: the guard it sees
+    comes from unpickling `work`."""
     def probe(batches):
         import importlib
         import os
         import sys
         import zipimport
 
-        import pyarrow as pa
-
-        from document_processor_spark import pipeline as P
-
-        parsed = sum(b.num_rows for b in P._arrow_worker(batches))
+        rows = sum(len(b) for b in work(batches))
         importers = [i for i in sys.path_importer_cache.values()
                      if isinstance(i, zipimport.zipimporter)]
         reads = []
@@ -129,16 +126,46 @@ def test_arrow_worker_rereads_no_unchanged_archive(spark):
             unguarded = n_reads(lambda: [stock(i) for i in importers])
         finally:
             zipimport._read_directory = stock_read
-        yield pa.RecordBatch.from_pydict({
-            "pid": [os.getpid()], "parsed": [parsed],
-            "importers": [len(importers)], "guarded": [guarded],
-            "unguarded": [unguarded]})
+        yield batch({"pid": [os.getpid()], "rows": [rows],
+                     "importers": [len(importers)], "guarded": [guarded],
+                     "unguarded": [unguarded]})
+    return probe
 
-    out = rows.mapInArrow(
-        probe, "pid long, parsed long, importers long, guarded long, "
-               "unguarded long").collect()
-    assert sum(r["parsed"] for r in out) == rows.count() > 0
+
+PROBE_DDL = "pid long, rows long, importers long, guarded long, unguarded long"
+
+
+def _assert_no_unchanged_rereads(out, n_rows):
+    """In each worker that ran the operator, a task start's
+    `importlib.invalidate_caches()` reads no archive directory, while the
+    stock method re-reads every zipimporter's archive in that process."""
+    assert sum(r["rows"] for r in out) == n_rows > 0
     for r in out:
         assert r["importers"] > 0, r
         assert r["unguarded"] == r["importers"], r
         assert r["guarded"] == 0, r
+
+
+def test_arrow_worker_rereads_no_unchanged_archive(spark):
+    import pyarrow as pa
+
+    rows = pipeline.explode_spans(fixtures.corpus_df(
+        spark, 0.001, include_skew=False)).repartition(4)
+    out = rows.mapInArrow(_reread_probe(
+        pipeline._arrow_worker, lambda cols: pa.RecordBatch.from_pydict(cols)),
+        PROBE_DDL).collect()
+    _assert_no_unchanged_rereads(out, rows.count())
+
+
+def test_multimodal_pandas_worker_rereads_no_unchanged_archive(spark):
+    """The guard reaches mapInPandas operators too: it is installed when
+    the worker imports the package to unpickle the operator's function."""
+    import pandas as pd
+
+    media = spark.createDataFrame(
+        [(i, bytearray(b"x" * (i % 50)), "image/png", i) for i in range(200)],
+        "doc_id bigint, payload binary, media_type string, hint bigint",
+    ).repartition(4)
+    out = media.mapInPandas(_reread_probe(multimodal._feature_batches,
+                                          pd.DataFrame), PROBE_DDL).collect()
+    _assert_no_unchanged_rereads(out, 200)
